@@ -945,7 +945,8 @@ def _q_drift_shingled_events(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
     w = W.partitionBy("event_type").orderBy("ts", "event_id")
     seqd = e.withColumn("seq", F.row_number().over(w).cast("long")).select(
-        "event_type", "seq", F.array(F.col("value").cast("double")).alias("features")
+        "event_type", "seq",
+        F.struct(F.col("value").cast("double").alias("value")).alias("features"),
     )
     cfg = DriftConfig(num_trees=10, sample_size=64, chunk_size=512,
                       window=64, min_baseline_windows=3, buckets=1,
@@ -972,7 +973,8 @@ def _q_drift_multimode_events(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
     w = W.partitionBy("event_type").orderBy("ts", "event_id")
     seqd = e.withColumn("seq", F.row_number().over(w).cast("long")).select(
-        "event_type", "seq", F.array(F.col("value").cast("double")).alias("features")
+        "event_type", "seq",
+        F.struct(F.col("value").cast("double").alias("value")).alias("features"),
     )
     cfg = DriftConfig(num_trees=10, sample_size=64, chunk_size=512,
                       window=64, min_baseline_windows=3, buckets=1,
@@ -1000,7 +1002,8 @@ def _q_drift_multimode_recall_events(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
     w = W.partitionBy("event_type").orderBy("ts", "event_id")
     seqd = e.withColumn("seq", F.row_number().over(w).cast("long")).select(
-        "event_type", "seq", F.array(F.col("value").cast("double")).alias("features")
+        "event_type", "seq",
+        F.struct(F.col("value").cast("double").alias("value")).alias("features"),
     )
     cfg = DriftConfig(num_trees=10, sample_size=64, chunk_size=512,
                       window=64, min_baseline_windows=3, buckets=1,
@@ -1027,7 +1030,8 @@ def _q_drift_autoadjust_events(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
     w = W.partitionBy("event_type").orderBy("ts", "event_id")
     seqd = e.withColumn("seq", F.row_number().over(w).cast("long")).select(
-        "event_type", "seq", F.array(F.col("value").cast("double")).alias("features")
+        "event_type", "seq",
+        F.struct(F.col("value").cast("double").alias("value")).alias("features"),
     )
     cfg = DriftConfig(num_trees=10, sample_size=64, chunk_size=512,
                       window=64, min_baseline_windows=3, buckets=1,
@@ -1054,7 +1058,8 @@ def _q_drift_impute_events(spark, sf_dir):
     w = W.partitionBy("event_type").orderBy("ts", "event_id")
     seqd = e.withColumn("seq", F.row_number().over(w).cast("long"))
     gapped = seqd.filter(F.pmod(F.col("seq"), F.lit(3)) != 0).select(
-        "event_type", "seq", F.array(F.col("value").cast("double")).alias("features")
+        "event_type", "seq",
+        F.struct(F.col("value").cast("double").alias("value")).alias("features"),
     )
     cfg = DriftConfig(num_trees=10, sample_size=64, chunk_size=512,
                       window=64, min_baseline_windows=3,
@@ -1157,7 +1162,8 @@ def _q_drift_lineage_events(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
     w = W.partitionBy("event_type").orderBy("ts", "event_id")
     seqd = e.withColumn("seq", F.row_number().over(w).cast("long")).select(
-        "event_type", "seq", F.array(F.col("value").cast("double")).alias("features")
+        "event_type", "seq",
+        F.struct(F.col("value").cast("double").alias("value")).alias("features"),
     )
     cfg = DriftConfig(num_trees=10, sample_size=64, chunk_size=512,
                       window=64, min_baseline_windows=3,

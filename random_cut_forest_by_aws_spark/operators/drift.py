@@ -6,8 +6,8 @@ re-expression of the reference's ThresholdedRandomCutForest pipeline
 (``parkservices/ThresholdedRandomCutForest.java:234-277``: preprocess →
 score → threshold → update):
 
-* feature columns are computed JVM-side (`functions.token_features`), so
-  the UDF receives a ready float matrix via Arrow — no per-row Python;
+* features are computed JVM-side (`functions.token_features`), so the
+  UDF receives a ready float matrix via Arrow — no per-row Python;
 * per-partition streaming NORMALIZE transform (discounted per-dim
   mean/dev, ``preprocessor/Preprocessor.java:807-820``) applied in
   closed-form per chunk;
@@ -21,6 +21,13 @@ salts the skewed key (web ≈ 80% of rows) into bounded-size partitions, so
 one hot source cannot overwhelm a single task (north_rule skew handling).
 Per-source verdicts then merge bucket verdicts. Shuffle count: exactly one
 (the groupBy); the forest state lives entirely inside the task.
+
+Feature contract: the feature column is a struct of numeric fields, one
+per dimension in field order (``F.struct(...)``, as ``token_features``
+builds it) — the reference's dense fixed-width point
+(``inputtypes/Point.java``). The width is read from ``df.schema`` at plan
+time, so no probe job runs and any other type raises ``TypeError``
+before a job starts.
 
 Checkpoint/resume (north_rule d): with ``checkpoint_dir`` set, each group
 saves forest+thresholder+normalizer state keyed by group; a re-run skips
@@ -36,8 +43,9 @@ import os
 from dataclasses import dataclass, field, replace
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType, StructType
 
 from ..core.forest import RCFForest
 from ..core.thresholder import BasicThresholder, Deviation
@@ -134,7 +142,6 @@ class DriftConfig:
     rows_per_bucket: int = 25_000
     max_buckets: int = 4096
     checkpoint_dir: str | None = None
-    feature_dim: int = 4
     extra: dict = field(default_factory=dict)
 
 
@@ -187,6 +194,30 @@ def _transform_chunk(
         updated = True
     xn = norm.transform(base) if tf["do_stat"] else base.astype(np.float32)
     return base, real, xn, raw_last, updated
+
+
+def _feature_columns(df: DataFrame, feature_col: str) -> tuple[list[str], list[Column]]:
+    """The ``feature_col`` struct's fields as ``__feat{j}`` scalar columns,
+    in field order: (names, projections). Checked against the schema, so
+    a wrong feature shape fails when the plan is built."""
+    dtype = df.schema[feature_col].dataType
+    fields = dtype.fields if isinstance(dtype, StructType) else []
+    if not fields or not all(isinstance(f.dataType, NumericType) for f in fields):
+        raise TypeError(
+            f"feature column {feature_col!r} must be a non-empty struct of numeric "
+            f"fields, built with F.struct(...); got {dtype.simpleString()}"
+        )
+    names = [f"__feat{j}" for j in range(len(fields))]
+    return names, [F.col(feature_col).getField(f.name).alias(n) for f, n in zip(fields, names)]
+
+
+def _feature_matrix(pdf, feature_cols: list[str]) -> np.ndarray:
+    """C-ordered float64 matrix, one column per feature column: each
+    arrives as one contiguous Arrow float vector, so no per-row objects."""
+    X = np.empty((len(pdf), len(feature_cols)), np.float64)
+    for j, c in enumerate(feature_cols):
+        X[:, j] = pdf[c].to_numpy(np.float64)
+    return X
 
 
 def _group_seed(key: tuple, seed: int) -> int:
@@ -514,26 +545,15 @@ def _load_group_state(path_or_file):
     return forest, th, state, extras
 
 
-def _make_drift_fn(group_cols: list[str], order_col: str, feature_col: str, cfg: DriftConfig):
-    """Build the grouped-map function (pickled to executors)."""
+def _make_drift_fn(group_cols: list[str], order_col: str, feature_cols: list[str], cfg: DriftConfig):
+    """Build the grouped-map function (pickled to executors). Each row's
+    feature vector is its ``feature_cols`` values, in list order."""
 
     out_cols = group_cols + [
         order_col, "score", "threshold", "grade", "row_kind",
         "n_rows", "n_scored", "n_anomalous", "n_windows",
         "n_drifted_windows", "n_imputed", "mean_score",
     ]
-
-    def _row_features(row) -> np.ndarray:
-        """Feature vector of one pandas row — array column or the
-        scalarized ``__feat{j}`` columns (see drift_scores)."""
-        if feature_col in row.index:
-            return np.asarray(row[feature_col], np.float64)
-        j = 0
-        out = []
-        while f"__feat{j}" in row.index:
-            out.append(float(row[f"__feat{j}"]))
-            j += 1
-        return np.asarray(out, np.float64)
 
     def fn(key, pdf):
         import time as _time
@@ -561,29 +581,11 @@ def _make_drift_fn(group_cols: list[str], order_col: str, feature_col: str, cfg:
             amask = pdf["__anchor"].to_numpy() == 1
             if amask.any():
                 anc = pdf[amask].iloc[-1]
-                block_anchor = (
-                    int(anc[order_col]),
-                    _row_features(anc),
-                )
+                block_anchor = (int(anc[order_col]), anc[feature_cols].to_numpy(np.float64))
                 pdf = pdf[~amask]
             if len(pdf) == 0:
                 return pd.DataFrame([], columns=out_cols)
-        if feature_col in pdf.columns:
-            X = np.stack(pdf[feature_col].to_numpy()).astype(np.float64)
-        else:
-            # scalarized features (drift_scores projects the array to
-            # __feat{j} float columns before the exchange): each column
-            # arrives as one contiguous Arrow float vector — no per-row
-            # ndarray objects to build, ~2x less grouped-map overhead
-            # (round-6 A/B: 5.1 -> 2.7 s trivial-fn wall at 2M rows)
-            fcols = []
-            j = 0
-            while f"__feat{j}" in pdf.columns:
-                fcols.append(f"__feat{j}")
-                j += 1
-            X = np.empty((len(pdf), len(fcols)), np.float64)
-            for jj, c in enumerate(fcols):
-                X[:, jj] = pdf[c].to_numpy(np.float64)
+        X = _feature_matrix(pdf, feature_cols)
         seqs = pdf[order_col].to_numpy(np.int64)
         if cfg.mode == "time_augmented" and len(X):
             # ForestMode.TIME_AUGMENTED: the order_col gap becomes an extra
@@ -1048,9 +1050,12 @@ def drift_scores(
 ) -> DataFrame:
     """Raw drift output: anomaly rows + one summary row per (group, bucket).
 
-    Input must already carry ``feature_col`` (see functions.token_features)
-    and a monotone ``order_col``. Only the needed columns cross the Arrow
-    boundary (tokens etc. are pruned before the shuffle).
+    Input must already carry ``feature_col`` — a struct of numeric fields,
+    one per feature dimension in field order (``F.struct(...)``; see
+    functions.token_features) — and a monotone ``order_col``. The width
+    is read from ``df.schema``; any other feature type raises
+    ``TypeError`` before a job runs. Only the needed columns cross the
+    Arrow boundary (tokens etc. are pruned before the shuffle).
     """
     cfg = cfg or DriftConfig()
     if cfg.mode not in ("standard", "time_augmented", "streaming_impute"):
@@ -1078,6 +1083,7 @@ def drift_scores(
         "expected_inverse_depth", "distance", "multi_mode", "multi_mode_recall"
     ):
         raise ValueError(f"unknown ScoringStrategy {cfg.scoring!r}")
+    feat_names, feat_cols = _feature_columns(df, feature_col)
     gcols = list(group_cols)
     if cfg.mode in ("streaming_impute", "time_augmented"):
         if cfg.buckets is not None:
@@ -1234,31 +1240,15 @@ def drift_scores(
         n_part = cfg.extra.get("parallelism") or max(16, min(2 * known_b, 30_000))
     else:
         n_part = cfg.extra.get("parallelism") or max(dp * 2, 16)
-    # Scalarize the feature array to __feat{j} float columns BEFORE the
-    # exchange (guide §2.3 project-before-exchange + §4 fewer bytes
-    # across the Arrow boundary): flat float vectors shuffle tighter
-    # than list arrays, and on the Python side each column arrives as
-    # one contiguous buffer instead of 2M per-row ndarray objects
-    # (measured 5.1 -> 2.7 s trivial-fn grouped-map wall at 2M rows).
-    # The width is probed from one row; an empty/NULL-leading input
-    # falls back to shipping the array column unchanged (the grouped
-    # map accepts both shapes).
-    d_feat = None
-    try:
-        r0 = df.select(F.size(F.col(feature_col)).alias("d")).first()
-        if r0 is not None and r0["d"] is not None and int(r0["d"]) > 0:
-            d_feat = int(r0["d"])
-    except Exception:
-        d_feat = None
-    if d_feat:
-        bucketed = bucketed.select(
-            *[c for c in bucketed.columns if c != feature_col],
-            *[
-                F.element_at(F.col(feature_col), j + 1).alias(f"__feat{j}")
-                for j in range(d_feat)
-            ],
-        )
-    bucketed = bucketed.repartition(n_part, *key_cols)
+    # Project the feature struct to __feat{j} scalar columns BEFORE the
+    # exchange (project-before-exchange, fewer bytes across the Arrow
+    # boundary): flat float vectors shuffle tighter than nested values,
+    # and on the Python side each column arrives as one contiguous
+    # buffer instead of per-row objects (measured 5.1 -> 2.7 s
+    # trivial-fn grouped-map wall at 2M rows against an array column).
+    bucketed = bucketed.select(
+        *[c for c in bucketed.columns if c != feature_col], *feat_cols
+    ).repartition(n_part, *key_cols)
     schema_prefix = ", ".join(
         f"{c} {t}" for c, t in bucketed.select(*key_cols).dtypes
     )
@@ -1268,7 +1258,7 @@ def drift_scores(
         "n_anomalous long, n_windows long, n_drifted_windows long, "
         "n_imputed long, mean_score double"
     )
-    fn = _make_drift_fn(key_cols, order_col, feature_col, cfg)
+    fn = _make_drift_fn(key_cols, order_col, feat_names, cfg)
     return bucketed.groupBy(*key_cols).applyInPandas(fn, schema=out_schema)
 
 

@@ -36,6 +36,8 @@ from ..core.forest import RCFForest
 from ..core.thresholder import BasicThresholder, Deviation
 from ..operators.drift import (
     DriftConfig,
+    _feature_columns,
+    _feature_matrix,
     _group_seed,
     _load_group_state,
     _Normalizer,
@@ -84,12 +86,15 @@ def streaming_drift_scores(
 ) -> DataFrame:
     """Streaming DataFrame → per-record anomaly descriptors.
 
-    ``df`` must be a streaming DataFrame already carrying ``feature_col``
-    (see functions.token_features) and ``order_col``.
+    ``df`` must be a streaming DataFrame already carrying ``order_col``
+    and ``feature_col``: a struct of numeric fields, one per dimension in
+    field order (``F.struct(...)``; see functions.token_features). Any
+    other feature type raises ``TypeError`` before the query starts.
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     cfg = cfg or DriftConfig()
+    feat_names, feat_cols = _feature_columns(df, feature_col)
     gcols = list(group_cols)
     buckets = cfg.buckets or 8
     bucketed = df.select(
@@ -98,7 +103,7 @@ def streaming_drift_scores(
         .cast("int")
         .alias("bucket"),
         F.col(order_col),
-        F.col(feature_col),
+        *feat_cols,
     )
     key_cols = gcols + ["bucket"]
     key_fields = [
@@ -136,7 +141,7 @@ def streaming_drift_scores(
         blocks: list[np.ndarray] = []
         for pdf in pdf_iter:
             pdf = pdf.sort_values(order_col, kind="mergesort")
-            X = np.stack(pdf[feature_col].to_numpy()).astype(np.float64)
+            X = _feature_matrix(pdf, feat_names)
             seqs = pdf[order_col].to_numpy(np.int64)
             if forest is None:
                 tf = _resolve_transform(cfg, X.shape[1])

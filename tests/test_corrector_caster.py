@@ -116,14 +116,15 @@ def test_run_length_filter_in_drift_operator():
     rng = np.random.default_rng(2)
     X = rng.normal(0, 1, size=(4000, 3))
     X[2000:2030] += 12.0  # all dims: a cascade the corrector cannot explain
+    fcols = ["f0", "f1", "f2"]
     pdf = pd.DataFrame({"source": "s", "bucket": 0, "seq": np.arange(4000),
-                        "features": [r for r in X]})
+                        **dict(zip(fcols, X.T))})
     kw = dict(num_trees=15, sample_size=64, chunk_size=512, buckets=1,
               window=4000, use_corrector=True, transform="none",
               normalize=False)
 
     def in_spike_anoms(run_sup):
-        fn = _make_drift_fn(["source", "bucket"], "seq", "features",
+        fn = _make_drift_fn(["source", "bucket"], "seq", fcols,
                             DriftConfig(**kw, run_length_suppression=run_sup))
         out = fn(("s", 0), pdf)
         an = out[out.row_kind == "anomaly"]

@@ -14,12 +14,13 @@ from random_cut_forest_by_aws_spark.operators.drift import (
 
 
 def _run(cfg, X, seqs=None, key=("s", 0)):
+    X = np.asarray(X, np.float64)
     seqs = np.arange(len(X)) if seqs is None else np.asarray(seqs)
+    fcols = [f"f{j}" for j in range(X.shape[1])]
     pdf = pd.DataFrame(
-        {"source": key[0], "bucket": key[1], "seq": seqs,
-         "features": [np.asarray(r, np.float64) for r in X]}
+        {"source": key[0], "bucket": key[1], "seq": seqs, **dict(zip(fcols, X.T))}
     )
-    fn = _make_drift_fn(["source", "bucket"], "seq", "features", cfg)
+    fn = _make_drift_fn(["source", "bucket"], "seq", fcols, cfg)
     return fn(key, pdf)
 
 

@@ -4,8 +4,11 @@ Plus checkpoint/resume equivalence and normalizer closed-form math."""
 
 from __future__ import annotations
 
+import uuid
+
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from random_cut_forest_by_aws_spark.core.thresholder import Deviation
 from random_cut_forest_by_aws_spark.functions import token_features
@@ -135,13 +138,9 @@ def test_streaming_impute_range_blocked_matches_single_stream(spark):
     keep[500:505] = False     # interior gap
     vals = rng.normal(0.0, 1.0, (n, 2))
     pdf = pd.DataFrame(
-        {
-            "source": "s",
-            "seq": np.arange(n)[keep],
-            "features": [[float(a), float(b)] for a, b in vals[keep]],
-        }
+        {"source": "s", "seq": np.arange(n)[keep], "a": vals[keep, 0], "b": vals[keep, 1]}
     )
-    df = spark.createDataFrame(pdf)
+    df = spark.createDataFrame(pdf).select("source", "seq", F.struct("a", "b").alias("features"))
     base = dict(
         num_trees=10, sample_size=32, chunk_size=256, window=64,
         min_baseline_windows=3, use_corrector=False,
@@ -179,10 +178,8 @@ def test_time_augmented_range_blocked_cadence(spark):
     seqs = np.concatenate(
         [np.arange(0, 20000, 10), 20000 + np.arange(n - 2000)]
     )  # cadence 10 → 1 at midpoint
-    pdf = pd.DataFrame(
-        {"source": "s", "seq": seqs, "features": [[1.0, 2.0]] * n}
-    )
-    df = spark.createDataFrame(pdf)
+    pdf = pd.DataFrame({"source": "s", "seq": seqs, "a": 1.0, "b": 2.0})
+    df = spark.createDataFrame(pdf).select("source", "seq", F.struct("a", "b").alias("features"))
     base = dict(
         num_trees=10, sample_size=64, chunk_size=256, window=64,
         min_baseline_windows=3, use_corrector=False, mode="time_augmented",
@@ -250,21 +247,89 @@ def test_drift_lineage_bucket_grain_consistent_with_verdicts(feat_df):
     raw.unpersist()
 
 
+def _jobs_run_by(spark, build) -> list[int]:
+    """Spark jobs run by ``build()`` (plan building only: no action on the
+    drift output)."""
+    sc = spark.sparkContext
+    group = f"drift-plan-build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "drift_scores plan build")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
 def test_drift_scores_plan_build_jobs(spark, seqs):
-    """Building the drift plan (no action on its output yet) sizes the
-    adaptive buckets in ONE driver round trip over the per-group counts,
-    plus the feature-width probe: at most 3 Spark jobs on the suite's
-    shape (one small-cardinality group column). Caching the counts, then
-    aggregating and collecting them separately, took 6."""
+    """Building the drift plan sizes the adaptive buckets in ONE driver
+    round trip over the per-group counts — at most 2 Spark jobs on the
+    suite's shape (one small-cardinality group column); the feature
+    width comes from the schema, not a probe job. With a fixed bucket
+    count nothing needs sizing, so no job runs at all."""
     feat = seqs.withColumn("features", token_features()).select(
         "source", "seq", "features"
     )
-    sc = spark.sparkContext
-    group = "drift-plan-build"
-    sc.setJobGroup(group, "drift_scores plan build")
-    try:
-        drift_scores(feat, cfg=DriftConfig(rows_per_bucket=2_000))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 3, jobs
+    jobs = _jobs_run_by(spark, lambda: drift_scores(feat, cfg=DriftConfig(rows_per_bucket=2_000)))
+    assert 0 < len(jobs) <= 2, jobs
+    assert _jobs_run_by(spark, lambda: drift_scores(feat, cfg=DriftConfig(buckets=4))) == []
+
+
+@pytest.mark.parametrize(
+    "features, got",
+    [
+        ("array(CAST(seq AS DOUBLE))", "array<double>"),  # the old array form
+        ("named_struct()", "struct<>"),
+        ("named_struct('x', CAST(seq AS DOUBLE), 'tag', 'a')", "struct<x:double,tag:string>"),
+    ],
+)
+def test_drift_scores_rejects_non_struct_features_at_plan_time(spark, features, got):
+    """The feature column must be a non-empty struct of numeric fields;
+    anything else raises TypeError from the schema, before any job — in
+    the batch and the streaming operator alike."""
+    from random_cut_forest_by_aws_spark.streaming import streaming_drift_scores
+
+    df = spark.range(10).select(
+        F.lit("s").alias("source"), F.col("id").alias("seq"),
+        F.expr(features).alias("features"),
+    )
+    for op in (drift_scores, streaming_drift_scores):
+        def build():
+            with pytest.raises(TypeError, match=r"F\.struct") as err:
+                op(df, cfg=_cfg())
+            assert f"got {got}" in str(err.value)
+
+        assert _jobs_run_by(spark, build) == []
+
+
+def test_drift_scores_struct_field_order_matches_udf(spark):
+    """drift_scores over a 2-field struct gives exactly the raw rows the
+    grouped-map fn gives on the same pandas rows with the fields as
+    columns in struct order: field order is feature order through the
+    exchange and the Arrow boundary. The fields are not in name order and
+    have different scales, so a reordering changes the scores."""
+    import pandas as pd
+
+    from random_cut_forest_by_aws_spark.operators.drift import _make_drift_fn
+
+    n = 3000
+    rng = np.random.default_rng(11)
+    pdf = pd.DataFrame({
+        "source": "s", "seq": np.arange(n, dtype=np.int64),
+        "z": rng.normal(0.0, 1.0, n), "a": rng.normal(5.0, 20.0, n),
+    })
+    pdf.loc[2000:2010, "a"] += 200.0
+    cfg = _cfg(buckets=1, num_trees=10, sample_size=32, chunk_size=256,
+               transform="none", normalize=False)
+    df = spark.createDataFrame(pdf).select(
+        "source", "seq", F.struct("z", "a").alias("features")
+    )
+    got = drift_scores(df, cfg=cfg).toPandas()
+    fn = _make_drift_fn(["source", "bucket"], "seq", ["z", "a"], cfg)
+    want = fn(("s", 0), pdf.assign(bucket=0))
+    key = ["row_kind", "seq"]
+    got = got.sort_values(key).reset_index(drop=True)
+    want = want.sort_values(key).reset_index(drop=True)
+    assert (got.row_kind == "anomaly").any()
+    assert list(got.columns) == list(want.columns)
+    for c in got.columns:
+        np.testing.assert_array_equal(got[c].to_numpy(), want[c].to_numpy(), err_msg=c)

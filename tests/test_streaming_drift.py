@@ -83,10 +83,8 @@ def test_streaming_drift_shingled_matches_batch(spark, tmp_path):
     n = 3000
     vals = rng.normal(0.0, 0.5, (n, 2))
     pdf = pd.DataFrame(
-        {"source": "s", "seq": np.arange(n),
-         "features": [[float(a), float(b)] for a, b in vals]}
+        {"source": "s", "seq": np.arange(n), "a": vals[:, 0], "b": vals[:, 1]}
     )
-    feat = spark.createDataFrame(pdf)
     # ordered delivery: contiguous seq ranges, one file per micro-batch
     # (FileStreamSource orders by mtime then path — ascending names keep
     # range order on ms-granularity ties); cross-batch ordering is the
@@ -99,12 +97,16 @@ def test_streaming_drift_shingled_matches_batch(spark, tmp_path):
     os.makedirs(src_dir, exist_ok=True)
     for i in range(6):
         part = pdf.iloc[i * 500 : (i + 1) * 500]
+        features = pa.StructArray.from_arrays(
+            [pa.array(part["a"].to_numpy()), pa.array(part["b"].to_numpy())], ["a", "b"]
+        )
         pq.write_table(
-            pa.Table.from_pandas(part, preserve_index=False),
+            pa.table({"source": part["source"].to_numpy(),
+                      "seq": part["seq"].to_numpy(), "features": features}),
             os.path.join(src_dir, f"part-{i:03d}.parquet"),
         )
     stream = (
-        spark.readStream.schema(feat.schema)
+        spark.readStream.schema("source string, seq long, features struct<a: double, b: double>")
         .option("maxFilesPerTrigger", "1")
         .option("latestFirst", "false")
         .parquet(src_dir)
@@ -121,7 +123,7 @@ def test_streaming_drift_shingled_matches_batch(spark, tmp_path):
     # batch reference over the same rows, same config
     from random_cut_forest_by_aws_spark.operators.drift import _make_drift_fn
 
-    fn = _make_drift_fn(["source", "bucket"], "seq", "features", cfg)
+    fn = _make_drift_fn(["source", "bucket"], "seq", ["a", "b"], cfg)
     bpdf = pdf.copy()
     bpdf["bucket"] = 0
     bref = fn(("s", 0), bpdf)
