@@ -1273,7 +1273,9 @@ def drift_verdicts(raw: DataFrame, group_cols=("source",), cfg: DriftConfig | No
         F.sum("n_windows").alias("n_windows"),
         F.sum("n_drifted_windows").alias("n_drifted_windows"),
         F.sum("n_imputed").alias("n_imputed"),
-        (F.sum(F.col("mean_score") * F.col("n_scored")) / F.sum("n_scored")).alias(
+        # null when no bucket of the group scored a row (a plain divide
+        # raises DIVIDE_BY_ZERO under ANSI)
+        F.try_divide(F.sum(F.col("mean_score") * F.col("n_scored")), F.sum("n_scored")).alias(
             "mean_score"
         ),
     )
@@ -1308,7 +1310,8 @@ def drift_lineage(
     for exactly one checkpointable unit of work.
 
     Pure reshape of the summary rows the grouped map already emits — no
-    extra shuffle (reuses the cached raw plan) and no hot-path change.
+    extra shuffle (reads ``raw`` as the caller materialized it: the suite
+    passes its ``localCheckpoint``) and no hot-path change.
     ``config_digest`` fingerprints the DriftConfig so re-runs with
     different hyperparameters are distinguishable in the metrics table.
     """

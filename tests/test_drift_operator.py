@@ -217,6 +217,27 @@ def test_adaptive_bucketing_join_fallback_multi_group_cols(spark, seqs):
     assert agg["ns"] > 0
 
 
+def test_drift_verdicts_null_mean_score_when_group_scores_nothing(spark):
+    """A group whose buckets all score no rows (each bucket shorter than
+    the warm-up) gets a null mean_score instead of DIVIDE_BY_ZERO under
+    ANSI; groups that scored rows keep a number."""
+    df = sequences(spark, 20_000, seed=42, drift=True)
+    feat = df.withColumn("features", token_features("tokens", "n_tok")).select(
+        "source", "seq", "features"
+    )
+    cfg = DriftConfig(num_trees=20, sample_size=64, chunk_size=512, buckets=2, shingle_size=3)
+    raw = drift_scores(feat, "features", ("source",), "seq", cfg).localCheckpoint()
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        rows = drift_verdicts(raw, ("source",), cfg).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert any(r["n_scored"] == 0 for r in rows)
+    for r in rows:
+        assert (r["mean_score"] is None) == (r["n_scored"] == 0), r
+
+
 def test_drift_lineage_bucket_grain_consistent_with_verdicts(feat_df):
     """Lineage keeps the (group, bucket) grain — one row per checkpoint
     unit — and its counters aggregate exactly to the verdict table."""

@@ -174,44 +174,70 @@ def test_uniqueness_single_exchange(spark):
     assert plan.count("Exchange") == 1, plan
 
 
-def _read_plan(df) -> str:
-    """The final plan of the collected ``df`` without the subtrees of
-    cached relations: those ran when the cache was filled, not on this
-    read (and each carries its own nested AQE "== Initial Plan ==", so
-    ``_final_plan``'s split would cut the tree short)."""
-    df.collect()
-    keep, cut = [], None
-    for line in df._jdf.queryExecution().executedPlan().toString().splitlines():
-        depth = len(line) - len(line.lstrip(" :+-"))  # column of the node text
-        if cut is not None and depth > cut:
-            continue
-        cut = None
-        if "== Initial Plan ==" in line:
-            break
-        keep.append(line)
-        if "InMemoryRelation" in line:
-            cut = depth
-    return "\n".join(keep)
-
-
-def test_suite_verdicts_read_no_python_rdd(spark, seqs):
-    """The verdict rows the driver already holds (uniqueness, referential,
-    token_array_equality) and the reference dimension are local
-    relations: reading the verdicts runs no Python-worker tasks. Built
-    with ``createDataFrame(<list>)`` each was a ``Scan ExistingRDD`` over
-    a parallelized Python RDD (three in this plan)."""
+def _suite_run(spark, seqs, **kw):
     from random_cut_forest_by_aws_spark.operators.drift import DriftConfig
     from random_cut_forest_by_aws_spark.plans import SuiteConfig, ValidationSuite
     from random_cut_forest_by_aws_spark.sources import sources_dim
 
-    dim = sources_dim(spark)
-    assert "LocalTableScan" in _read_plan(dim)
     cfg = SuiteConfig(
         drift=DriftConfig(num_trees=5, sample_size=16, window=8,
-                          min_baseline_windows=2, buckets=1, chunk_size=256)
+                          min_baseline_windows=2, buckets=1, chunk_size=256),
+        **kw,
     )
-    res = ValidationSuite(spark, cfg).run(seqs, ref_dim=dim)
-    plan = _read_plan(res.verdicts)
-    assert "Scan ExistingRDD" not in plan, plan
-    assert plan.count("LocalTableScan") == 1, plan
-    assert plan.count("InMemoryTableScan") >= 1, plan
+    return ValidationSuite(spark, cfg).run(seqs, ref_dim=sources_dim(spark))
+
+
+def _leaf_names(df) -> list[str]:
+    """Node names of the leaves of the final physical plan of ``df``,
+    which must have been collected already."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    leaves = plan.collectLeaves()
+    return [leaves.apply(i).nodeName() for i in range(leaves.size())]
+
+
+def test_suite_verdicts_read_no_python_rdd(spark, seqs):
+    """The suite holds every check result on the driver as a local
+    relation, so reading ``verdicts`` and ``violations`` scans no input,
+    shuffles nothing and runs no Python-worker tasks: every leaf of both
+    read plans is a ``LocalTableScan``. While the checks were cached, the
+    verdicts read re-scanned them (``InMemoryTableScan``); before that,
+    the driver-known rows were ``Scan ExistingRDD`` over a parallelized
+    Python RDD. The reference dimension is a local relation too."""
+    from random_cut_forest_by_aws_spark.sources import sources_dim
+
+    assert "LocalTableScan" in _final_plan(sources_dim(spark))
+    res = _suite_run(spark, seqs)
+    for table in (res.verdicts, res.violations):
+        plan = _final_plan(table)
+        for node in ("InMemoryTableScan", "FileScan", "Exchange", "Scan ExistingRDD"):
+            assert node not in plan, plan
+        leaves = _leaf_names(table)
+        assert leaves and set(leaves) == {"LocalTableScan"}, plan
+
+
+def _settled_jobs(spark) -> int:
+    """Jobs run so far outside any job group, once the listener bus has
+    caught up (job events reach the status tracker asynchronously)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(None))
+
+
+def test_suite_run_leaves_no_cache_and_bounded_jobs(spark, seqs):
+    """A suite run registers nothing with the CacheManager (cached check
+    results were never released, five per run, so a second run read the
+    first run's results), and running it plus reading both tables takes
+    at most 21 Spark jobs on this fixture (26 when each check was cached,
+    counted, then re-read). Counted over all group-less jobs: a job
+    group set here would not reach the suite's pool thread."""
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    n_cached = cache_manager.cachedData().size()  # an immutable snapshot
+    j0 = _settled_jobs(spark)
+    res = _suite_run(spark, seqs)
+    res.verdicts.collect()
+    res.violations.collect()
+    jobs = _settled_jobs(spark) - j0
+    assert cache_manager.cachedData().size() == n_cached
+    assert 0 < jobs <= 21, jobs

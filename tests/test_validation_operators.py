@@ -191,3 +191,28 @@ def test_suite_concurrent_materialization_equivalent(spark, seqs):
     v_con, w_con = run(True)
     assert v_seq.equals(v_con)
     assert w_seq.equals(w_con)
+
+
+def test_suite_truncated_evidence_keeps_exact_counts(spark, seqs):
+    """With the evidence capped at one row per check, the table-level
+    violation counts stay exact (the suite counts a check's violations
+    again only when the cap is passed) and each check keeps exactly one
+    evidence row."""
+    from random_cut_forest_by_aws_spark.operators.drift import DriftConfig
+    from random_cut_forest_by_aws_spark.plans import SuiteConfig, ValidationSuite
+
+    cfg = SuiteConfig(
+        drift=DriftConfig(num_trees=5, sample_size=16, window=8,
+                          min_baseline_windows=2, buckets=1, chunk_size=256),
+        max_violation_rows=1,
+    )
+    res = ValidationSuite(spark, cfg).run(seqs, ref_dim=sources_dim(spark))
+    counts = {
+        r["check"]: r["violation_count"]
+        for r in res.verdicts.filter(F.col("scope") == "<table>").collect()
+    }
+    assert counts == {"uniqueness": 2, "referential": 1, "token_array_equality": 2}
+    evidence = res.violations.groupBy("check").count().collect()
+    assert {r["check"]: r["count"] for r in evidence} == {
+        "uniqueness": 1, "referential": 1, "token_array_equality": 1, "drift_anomaly": 1,
+    }
