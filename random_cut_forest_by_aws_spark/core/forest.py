@@ -13,11 +13,13 @@ Execution model (performance-critical):
   on flat index arrays that shrink as lanes finish, so total work is
   Σ path-lengths, not max-depth × lanes;
 * **updates** loop only over *accepted* reservoir events (O(k·log n) per
-  tree, not O(n)); the per-event tree surgery runs on pure-Python list
-  mirrors of one tree's arrays (NumPy scalar indexing costs ~µs/access —
-  ~20× slower than list ops at shingle-scale dims), synced back to the
-  canonical float32 arrays at batch end. All values written into mirrors
-  are float32-quantized on creation, so the sync is lossless and
+  tree, not O(n)); the optional C kernel (``core/ckernel.py``) does the
+  per-event tree surgery directly on the canonical arrays. The pure-Python
+  reference path builds list mirrors of one tree's arrays per batch
+  (NumPy scalar indexing costs ~µs/access — ~20× slower than list ops at
+  shingle-scale dims) and writes them back at batch end; nothing is
+  cached between batches. All values written into mirrors are
+  float32-quantized on creation, so the sync is lossless and
   checkpoint/resume stays bit-exact.
 
 Semantics re-expressed from the reference (file:line cites into
@@ -479,32 +481,19 @@ class RCFForest:
             int(_splitmix64(np.array([(seed * 40503 + 104729 * t + 2) & mask], np.uint64))[0])
             for t in range(T)
         ]
-        # persistent per-tree update mirrors: creating a _TreeOps costs
-        # ~11 array→list conversions per tree; the drift loop calls
-        # update_batch once per chunk, so reusing the mirror across calls
-        # (canonical arrays are only ever written through writeback)
-        # halves that overhead. Anything that mutates the canonical
-        # arrays NOT through a mirror must clear this cache.
-        self._mirrors: dict[int, _TreeOps] = {}
 
     # ------------------------------------------------------------------ #
     # single-op helpers (unit tests / small flows); batch path uses the
-    # same _TreeOps surgery without per-op mirror round-trips
+    # same _TreeOps surgery with one mirror per tree per batch
     # ------------------------------------------------------------------ #
-    def _ops(self, t: int) -> _TreeOps:
-        ops = self._mirrors.get(t)
-        if ops is None:
-            ops = self._mirrors[t] = _TreeOps(self, t)
-        return ops
-
     def _insert(self, t: int, x) -> int:
-        ops = self._ops(t)
+        ops = _TreeOps(self, t)
         leaf = ops.insert([float(np.float32(v)) for v in x])
         ops.writeback(self)
         return leaf
 
     def _delete(self, t: int, leaf: int) -> None:
-        ops = self._ops(t)
+        ops = _TreeOps(self, t)
         ops.delete(int(leaf))
         ops.writeback(self)
 
@@ -565,12 +554,11 @@ class RCFForest:
                 IU = np.vstack(
                     [_u01(self._ikeys[t], seqs64) for t in range(self.T)]
                 )
-            self._mirrors.clear()  # C mutates canonical arrays directly
             ck.update_batch_c(self, X64, seqs64, W, IU)
         else:
             xs = X.astype(np.float64).tolist()  # float32-exact python floats
             for t in range(self.T):
-                ops = self._ops(t)
+                ops = _TreeOps(self, t)
                 self._update_tree(t, ops, xs, seqs, rel)
                 ops.writeback(self)
         self.entries += B
@@ -1385,11 +1373,6 @@ class RCFForest:
             # checkpoint per (group, bucket) — point_store() returns
             # them for callers who want the explicit view
             state["ps_slot_idx"] = slot_idx.astype(np.int32)
-            # a state snapshot is a natural residency boundary: drop the
-            # cached update mirrors (tens of MB at large T·d) so
-            # checkpointed-then-idle forests don't pin them; the next
-            # update_batch rebuilds lazily (once per task tail)
-            self._mirrors.clear()
             if self.N <= np.iinfo(np.int16).max:
                 # node ids < N and masses <= K fit int16; from_state's
                 # array assignment upcasts back to the in-memory int32
@@ -1461,7 +1444,6 @@ class RCFForest:
         BFS level at a time, deepest first. Bit-exact: min/max unions are
         exact in float32 and insert/delete maintain internal boxes as
         exactly the child unions (invariant property-tested)."""
-        self._mirrors.clear()  # boxes are mutated below NOT via a mirror
         slot_tree, slot_leaf = self._slots()
         pts = points[slot_idx]
         self.bbmin[slot_tree, slot_leaf] = pts

@@ -13,7 +13,6 @@ and cluster sizes.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 import numpy as np
@@ -52,8 +51,6 @@ _XXH_P5 = 0x27D4EB2F165667C5
 
 
 def _xxh_fmix_np(h):
-    import numpy as np
-
     u = np.uint64
     h = h ^ (h >> u(33))
     h = h * u(_XXH_P2)
@@ -68,8 +65,6 @@ def _xxh_hash_long_np(vals, seed: int):
     seed)`` (init → one 8-byte round → avalanche). uint64 arithmetic
     wraps exactly like Java longs; bit-parity vs the JVM is pinned in
     tests/test_dedup.py."""
-    import numpy as np
-
     u = np.uint64
     x = vals.astype(np.uint64)
     h = u((seed + _XXH_P5 + 8) & 0xFFFFFFFFFFFFFFFF)
@@ -85,8 +80,6 @@ def _xxh_hash_int_scalar_over_seeds_np(i: int, seeds):
     """Vectorized ``XXH64.hashInt(i, seed)`` for ONE 4-byte value over a
     VECTOR of seeds — the shape of Spark's multi-argument ``xxhash64``
     chain, where the previous argument's hash becomes the seed."""
-    import numpy as np
-
     u = np.uint64
     h = seeds + u((_XXH_P5 + 4) & 0xFFFFFFFFFFFFFFFF)
     h = h ^ u(((i & 0xFFFFFFFF) * _XXH_P1) & 0xFFFFFFFFFFFFFFFF)
@@ -98,8 +91,6 @@ def _xxh_hash_long_scalar_over_seeds_np(l: int, seeds):
     """Vectorized ``XXH64.hashLong(l, seed)`` for ONE long value over a
     VECTOR of seeds (used when a permutation literal overflows int32
     and Spark plans it as a long literal)."""
-    import numpy as np
-
     u = np.uint64
     h = seeds + u((_XXH_P5 + 8) & 0xFFFFFFFFFFFFFFFF)
     k1 = ((l & 0xFFFFFFFFFFFFFFFF) * _XXH_P2) & 0xFFFFFFFFFFFFFFFF
@@ -110,15 +101,20 @@ def _xxh_hash_long_scalar_over_seeds_np(l: int, seeds):
     return _xxh_fmix_np(h)
 
 
+def _xxh_lit_link_np(lit: int, base):
+    """The literal's link of Spark's ``xxhash64(col, lit(lit))`` chain,
+    seeded by the column's hashes ``base``: an int-range literal takes
+    the 4-byte path, a long literal the 8-byte path."""
+    if -(2**31) <= lit < 2**31:
+        return _xxh_hash_int_scalar_over_seeds_np(lit, base).view(np.int64)
+    return _xxh_hash_long_scalar_over_seeds_np(lit, base).view(np.int64)
+
+
 def _xxhash64_long_lit_np(vals, lit: int):
     """Spark ``F.xxhash64(col_bigint, F.lit(lit))`` exactly: the literal
     is a SECOND HASHED ARGUMENT (the function's seed is fixed at 42),
-    chained as ``hash_lit(lit, hashLong(val, 42))``; an int-range
-    literal takes the 4-byte path, a long literal the 8-byte path."""
-    base = _xxh_hash_long_np(vals, 42)
-    if -(2**31) <= lit < 2**31:
-        return _xxh_hash_int_scalar_over_seeds_np(lit, base).view("int64")
-    return _xxh_hash_long_scalar_over_seeds_np(lit, base).view("int64")
+    chained as ``hash_lit(lit, hashLong(val, 42))``."""
+    return _xxh_lit_link_np(lit, _xxh_hash_long_np(vals, 42))
 
 
 _MINHASH_UDFS: dict[tuple[int, int], object] = {}
@@ -132,7 +128,6 @@ def _minhash_arrow_udf(num_hashes: int, seed: int):
     key = (num_hashes, seed)
     if key in _MINHASH_UDFS:
         return _MINHASH_UDFS[key]
-    import numpy as np
 
     def _sig(hs: pd.Series) -> pd.Series:
         arrs = hs.to_numpy()
@@ -154,14 +149,10 @@ def _minhash_arrow_udf(num_hashes: int, seed: int):
         # the chain's first link hashLong(h, 42) is permutation-
         # independent: compute it once, then one 4-byte link per
         # permutation (vs num_hashes full interpreted passes in the
-        # expression path)
+        # expression form)
         base = _xxh_hash_long_np(vals, 42)
         for j in range(num_hashes):
-            lit = seed + j
-            if -(2**31) <= lit < 2**31:
-                hj = _xxh_hash_int_scalar_over_seeds_np(lit, base).view(np.int64)
-            else:
-                hj = _xxh_hash_long_scalar_over_seeds_np(lit, base).view(np.int64)
+            hj = _xxh_lit_link_np(seed + j, base)
             if len(ne_starts):
                 mins[j] = np.minimum.reduceat(hj, ne_starts)
         out = np.empty(n, object)
@@ -186,7 +177,6 @@ def minhash_signature(
     shingle_hashes: Column,
     num_hashes: int = 32,
     seed: int = 42,
-    impl: str | None = None,
 ) -> Column:
     """array<bigint> of per-permutation min-hashes over pre-hashed shingles
     (one xxhash64 stream per permutation index — the standard 'k
@@ -194,25 +184,13 @@ def minhash_signature(
     hash the (expensive) shingle strings exactly once, then derive every
     permutation by re-hashing the cheap integers.
 
-    Two bit-identical implementations (parity-pinned): ``impl='arrow'``
-    (default; env ``RCF_MINHASH_IMPL`` overrides) computes every
-    permutation in one vectorized NumPy pass — the ``num_hashes``
-    interpreted ``transform`` lambdas of the expression path measured
-    ~2-5 s of the bench minhash query at 5k docs; ``impl='expr'`` keeps
-    the pure-JVM higher-order expressions (no Python workers)."""
-    impl = impl or os.environ.get("RCF_MINHASH_IMPL", "arrow")
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
-    if impl == "arrow":
-        return _minhash_arrow_udf(num_hashes, seed)(shingle_hashes)
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingle_hashes, lambda h: F.xxhash64(h, F.lit(seed + j)))
-            )
-            for j in range(num_hashes)
-        ]
-    )
+    Permutation ``j`` is ``array_min(transform(h, x -> xxhash64(x,
+    seed + j)))``, computed for all permutations in one vectorized NumPy
+    pass of an Arrow pandas UDF: the ``num_hashes`` interpreted
+    ``transform`` lambdas of that expression form measured ~2-5 s of the
+    bench minhash query at 5k docs. The expression form is the parity
+    oracle in ``tests/test_dedup.py``."""
+    return _minhash_arrow_udf(num_hashes, seed)(shingle_hashes)
 
 
 # mega-bucket guard shared by every band-bucket candidate generator:
@@ -266,13 +244,6 @@ def _band_buckets(
             "_h"
         ),
     )
-    if os.environ.get("RCF_MINHASH_IMPL", "arrow") == "expr":
-        # expression impl only: force an exchange so CollapseProject
-        # cannot inline the (expensive) shingle construction into all
-        # num_hashes array_min expressions downstream. The Arrow impl
-        # consumes _h as a single UDF argument (evaluated once), so the
-        # exchange would be pure overhead there.
-        hashed = hashed.repartition(F.col("_id"))
     sig = minhash_signature(F.col("_h"), num_hashes, seed)
     return hashed.select(F.col("_id"), sig.alias("_sig")).select(
         "_id",
@@ -390,8 +361,8 @@ _WINNOW_M = 2147483647
 
 
 def _winnow_arrow_udf(k: int, window: int):
-    """Vectorized winnowing kernel (same closed-form arithmetic as the
-    expression path, bit-identical output, parity-tested): UTF-32-LE
+    """Vectorized winnowing kernel (the closed-form arithmetic DuckDB
+    replays, parity-tested against a scalar reference): UTF-32-LE
     encode → codepoint array, one shifted-add polynomial pass, sliding
     window minima, distinct. int64 audit: cp ≤ 0x10FFFF (< 2^21),
     max power B⁴ ≈ 2^32 ⇒ per-term < 2^53, 5-term sum < 2^56."""
@@ -424,7 +395,6 @@ def winnow_fingerprints(
     text_col: str = "text",
     k: int = 5,
     window: int = 8,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken:
     "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD
@@ -447,29 +417,13 @@ def winnow_fingerprints(
     themselves, not just downstream counts). Documents shorter than
     ``k`` characters yield no fingerprints (NULL text = empty).
 
-    Two bit-identical implementations (parity-tested against each other
-    and a scalar reference):
-
-    * ``impl="arrow"`` (default): an Arrow-batched pandas UDF — UTF-32
-      codepoints via ``numpy.frombuffer``, one vectorized polynomial
-      pass, ``sliding_window_view(...).min(1)`` window minima. Measured
-      ~10M chars/s/core vs the expression path's ~0.23M — the nested
-      HOF transforms pay Catalyst per-element evaluation costs that a
-      columnar kernel doesn't (~44× per core; the A/B is in PLANS.md).
-    * ``impl="expr"``: JVM-side expression work fused into the scan —
-      no UDF, no Python workers, same exact integer arithmetic. Use
-      where Python worker processes are unavailable/undesired.
-
-    Plan-shape note (expr path): the k-gram array and the window-minima
-    transform are chained through single-element
-    ``transform(array(x), a -> ...)`` bindings rather than aliased
-    projections. Alias substitution (CollapseProject) would inline the
-    DEFINING expression of an aliased array into every
-    ``element_at``/``slice`` reference inside the downstream lambda —
-    recomputing the whole k-gram array once per window position,
-    O(len²·k) per document (measured: minutes for 500 ×550-char docs).
-    A lambda variable is a bound VALUE, so each stage is evaluated
-    exactly once per row.
+    Computed by an Arrow-batched pandas UDF: UTF-32 code points via
+    ``numpy.frombuffer``, one vectorized polynomial pass and
+    ``sliding_window_view(...).min(1)`` window minima (parity-tested
+    against a scalar reference). Measured ~10M chars/s/core vs ~0.23M
+    for the same arithmetic as nested higher-order expressions, which
+    pay Catalyst per-element evaluation costs (~44× per core; the A/B is
+    in PLANS.md).
     """
     if k <= 0 or window <= 0:
         raise ValueError(f"k and window must be positive, got {k}, {window}")
@@ -477,58 +431,16 @@ def winnow_fingerprints(
         # cp < 2^21 and B^5 > 2^40: six unreduced terms still fit int64,
         # but larger k needs an intermediate mod — keep the closed form
         raise ValueError("k > 5 would overflow the closed-form hash")
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
     from ._parallel import ensure_compute_parallelism
 
     # per-char hashing is the heaviest per-row kernel in the engine —
     # don't let a single-file input serialize it onto one core
     df = ensure_compute_parallelism(df)
-    if impl == "arrow":
-        fps_udf = _winnow_arrow_udf(k, window)
-        return df.select(
-            F.col(id_col),
-            F.explode(fps_udf(F.coalesce(F.col(text_col), F.lit("")))).alias("fp"),
-        )
-    powers = [_WINNOW_B ** (k - 1 - j) for j in range(k)]
-
-    def _one_to(n):
-        # 1..n as an array, EMPTY when n < 1: sequence(1, 0) yields the
-        # DESCENDING [1, 0] in Spark, never an empty array — guard it
-        return F.when(n >= 1, F.sequence(F.lit(1), n)).otherwise(
-            F.array().cast("array<int>")
-        )
-
-    def _bind(arr, fn):
-        # evaluate `arr` once, hand it to `fn` as a bound lambda value
-        return F.element_at(F.transform(F.array(arr), fn), 1)
-
-    chars = F.split(F.coalesce(F.col(text_col), F.lit("")), "")
-    # Spark's split('') yields a trailing empty string; drop empties so
-    # position arithmetic matches DuckDB's 1..len(text) code points
-    cps = F.transform(
-        F.filter(chars, lambda c: c != F.lit("")), lambda c: F.ascii(c).cast("bigint")
+    fps_udf = _winnow_arrow_udf(k, window)
+    return df.select(
+        F.col(id_col),
+        F.explode(fps_udf(F.coalesce(F.col(text_col), F.lit("")))).alias("fp"),
     )
-
-    def _kgram_hashes(a):
-        return F.transform(
-            _one_to(F.size(a) - (k - 1)),
-            lambda i: sum(
-                F.element_at(a, i + F.lit(j)) * F.lit(powers[j]) for j in range(k)
-            )
-            % F.lit(_WINNOW_M),
-        )
-
-    def _window_minima(h):
-        return F.array_distinct(
-            F.transform(
-                _one_to(F.size(h) - (window - 1)),
-                lambda i: F.array_min(F.slice(h, i, window)),
-            )
-        )
-
-    fps = _bind(cps, lambda a: _bind(_kgram_hashes(a), _window_minima))
-    return df.select(F.col(id_col), F.explode(fps).alias("fp"))
 
 
 def winnow_candidates(
@@ -538,7 +450,6 @@ def winnow_candidates(
     k: int = 5,
     window: int = 8,
     max_bucket: int = DEFAULT_MAX_BUCKET,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Shared-substring candidate pairs (id_a < id_b, n_shared_fps):
     documents sharing any winnowing fingerprint. By the winnowing
@@ -546,7 +457,7 @@ def winnow_candidates(
     characters appears here; the join shuffles only (fp, id) rows
     (~2n/window per doc), with the standard mega-bucket guard dropping
     degenerate fingerprints (boilerplate shared by > max_bucket docs)."""
-    fps = winnow_fingerprints(df, id_col, text_col, k, window, impl)
+    fps = winnow_fingerprints(df, id_col, text_col, k, window)
     return _shared_fp_pairs(fps, id_col, max_bucket)
 
 
@@ -571,7 +482,6 @@ def winnow_containment(
     k: int = 5,
     window: int = 8,
     max_bucket: int = DEFAULT_MAX_BUCKET,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Containment scoring over winnowing fingerprints: for every
     candidate pair, the shared-fingerprint fraction of the SMALLER
@@ -590,7 +500,7 @@ def winnow_containment(
     per-doc hashing scan — the dominant cost — from their forked
     un-materialized plans. n_shared counts DISTINCT fingerprints
     (winnow_fingerprints dedups per doc), so containment ≤ 1 exactly."""
-    fps = winnow_fingerprints(df, id_col, text_col, k, window, impl).localCheckpoint(
+    fps = winnow_fingerprints(df, id_col, text_col, k, window).localCheckpoint(
         eager=True
     )
     shared = _shared_fp_pairs(fps, id_col, max_bucket)

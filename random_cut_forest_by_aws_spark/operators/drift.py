@@ -40,7 +40,7 @@ from __future__ import annotations
 
 import hashlib
 import os
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
@@ -142,7 +142,6 @@ class DriftConfig:
     rows_per_bucket: int = 25_000
     max_buckets: int = 4096
     checkpoint_dir: str | None = None
-    extra: dict = field(default_factory=dict)
 
 
 def _resolve_transform(cfg: "DriftConfig", d: int) -> dict:
@@ -1092,6 +1091,7 @@ def drift_scores(
             # buckets is never valid here — force a single stream
             # (tests/back-compat)
             cfg = replace(cfg, buckets=1)
+            total_buckets = 1
             bucketed = df.select(
                 *gcols, F.lit(0).alias("bucket"), F.col(order_col), F.col(feature_col)
             )
@@ -1137,9 +1137,7 @@ def drift_scores(
                     F.ceil((F.max(order_col) - F.min(order_col)) / F.lit(span)) + 1
                 ).alias("__blocks")
             ).agg(F.sum("__blocks").alias("b")).first()
-            cfg = replace(
-                cfg, extra={**cfg.extra, "__total_buckets": int(span_row["b"] or 0)}
-            )
+            total_buckets = int(span_row["b"] or 0)
     else:
         # salt the (skewed) group key into bounded buckets. With buckets=
         # None the bucket count adapts per group value (ceil(rows/rows_per_
@@ -1148,6 +1146,7 @@ def drift_scores(
         # ones. The per-key count is computed distributively and joined
         # back (no driver-side collect — group_cols may be high-cardinality).
         if cfg.buckets is not None:
+            total_buckets = cfg.buckets
             bucketed = df.select(
                 *gcols,
                 F.pmod(F.xxhash64(F.col(order_col), F.lit(cfg.seed)), F.lit(cfg.buckets))
@@ -1214,7 +1213,6 @@ def drift_scores(
                         F.col(feature_col),
                     )
                 )
-            cfg = replace(cfg, extra={**cfg.extra, "__total_buckets": total_buckets})
     key_cols = gcols + ["bucket"]
     # Explicit user repartition on the group key: the UDF is CPU-bound, so
     # we must NOT let AQE coalesce the (byte-wise tiny) shuffle into a few
@@ -1233,13 +1231,10 @@ def drift_scores(
     # scheduling costs ~ms — noise against CPU-bound forest tasks.
     sc = df.sparkSession.sparkContext
     dp = sc.defaultParallelism
-    known_b = cfg.extra.get("__total_buckets") or (
-        cfg.buckets if cfg.buckets is not None else 0
-    )
-    if known_b:
-        n_part = cfg.extra.get("parallelism") or max(16, min(2 * known_b, 30_000))
+    if total_buckets:
+        n_part = max(16, min(2 * total_buckets, 30_000))
     else:
-        n_part = cfg.extra.get("parallelism") or max(dp * 2, 16)
+        n_part = max(dp * 2, 16)
     # Project the feature struct to __feat{j} scalar columns BEFORE the
     # exchange (project-before-exchange, fewer bytes across the Arrow
     # boundary): flat float vectors shuffle tighter than nested values,
@@ -1315,12 +1310,8 @@ def drift_lineage(
     ``config_digest`` fingerprints the DriftConfig so re-runs with
     different hyperparameters are distinguishable in the metrics table.
     """
-    import hashlib
-
     cfg = cfg or DriftConfig()
-    core = {
-        k: v for k, v in vars(cfg).items() if k != "extra" and not callable(v)
-    }
+    core = {k: v for k, v in vars(cfg).items() if not callable(v)}
     digest = hashlib.blake2b(
         repr(sorted(core.items(), key=lambda kv: kv[0])).encode(), digest_size=8
     ).hexdigest()

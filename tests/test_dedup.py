@@ -193,12 +193,11 @@ def _py_winnow(text: str, k: int = 5, w: int = 8) -> set[int]:
     return {min(kh[i:i + w]) for i in range(len(kh) - w + 1)}
 
 
-@pytest.mark.parametrize("impl", ["arrow", "expr"])
-def test_winnow_fingerprints_match_scalar_replay(spark, impl):
-    """BOTH implementations (vectorized Arrow kernel and JVM expression
-    pipeline) are bit-identical to the scalar polynomial-hash +
-    window-min reference on mixed-length docs, including the
-    no-fingerprint shorts (len < window+k-1), NULL, and non-ASCII."""
+def test_winnow_fingerprints_match_scalar_replay(spark):
+    """The vectorized Arrow kernel is bit-identical to the scalar
+    polynomial-hash + window-min reference on mixed-length docs,
+    including the no-fingerprint shorts (len < window+k-1), NULL, and
+    non-ASCII."""
     from random_cut_forest_by_aws_spark.operators.dedup import winnow_fingerprints
 
     rng = np.random.default_rng(11)
@@ -208,7 +207,7 @@ def test_winnow_fingerprints_match_scalar_replay(spark, impl):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    got = winnow_fingerprints(df, impl=impl).toPandas()
+    got = winnow_fingerprints(df).toPandas()
     by_doc = got.groupby("doc_id")["fp"].apply(set).to_dict()
     for i, t in enumerate(texts):
         assert by_doc.get(i, set()) == _py_winnow(t or ""), f"doc {i}"
@@ -323,8 +322,6 @@ def test_winnow_param_validation(spark):
         winnow_fingerprints(df, k=0)
     with pytest.raises(ValueError):
         winnow_fingerprints(df, window=0)
-    with pytest.raises(ValueError):
-        winnow_fingerprints(df, impl="jit")
 
 
 def test_duplicate_clusters_deep_diameter_chain(spark):
@@ -378,11 +375,27 @@ def test_winnow_containment_prefix_and_disjoint(spark):
     assert not any(2 in idx for idx in out.index)
 
 
+def _minhash_expr_oracle(shingle_hashes, num_hashes, seed):
+    """The pure-JVM expression form of ``minhash_signature``: one
+    interpreted ``transform`` + ``array_min`` per permutation."""
+    from pyspark.sql import functions as F
+
+    return F.array(
+        *[
+            F.array_min(
+                F.transform(shingle_hashes, lambda h: F.xxhash64(h, F.lit(seed + j)))
+            )
+            for j in range(num_hashes)
+        ]
+    )
+
+
 def test_minhash_arrow_kernel_parity(spark):
     """The vectorized XXH64 minhash kernel must replay Spark's
     ``xxhash64(h, lit(seed + j))`` chain bit-for-bit — including the
     int-literal (4-byte) vs long-literal (8-byte) second link — and the
-    array/expr signature paths must agree on null/empty inputs."""
+    signature must equal the JVM expression form it replaces, including
+    on null/empty inputs (an array of ``num_hashes`` NULLs)."""
     from pyspark.sql import functions as F
 
     from random_cut_forest_by_aws_spark.operators.dedup import (
@@ -404,9 +417,10 @@ def test_minhash_arrow_kernel_parity(spark):
             (5, list(range(200)))]
     d2 = spark.createDataFrame(rows, "id int, h array<long>")
     a = {r["id"]: r["s"] for r in d2.select(
-        "id", minhash_signature(F.col("h"), 32, 42, impl="arrow").alias("s")
+        "id", minhash_signature(F.col("h"), 32, 42).alias("s")
     ).collect()}
     b = {r["id"]: r["s"] for r in d2.select(
-        "id", minhash_signature(F.col("h"), 32, 42, impl="expr").alias("s")
+        "id", _minhash_expr_oracle(F.col("h"), 32, 42).alias("s")
     ).collect()}
     assert a == b
+    assert a[2] == a[3] == [None] * 32

@@ -265,6 +265,9 @@ def test_drift_lineage_bucket_grain_consistent_with_verdicts(feat_df):
             assert int(row[c]) == int(dv.loc[src][c]), (src, c)
     # config fingerprint is present and constant per run
     assert lin["config_digest"].nunique() == 1
+    # and pinned: the digest hashes every DriftConfig field, so adding,
+    # removing or renaming a hashed field changes it
+    assert lin["config_digest"].iloc[0] == "cf9fea6c863ef735"
     raw.unpersist()
 
 

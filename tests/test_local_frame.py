@@ -129,15 +129,19 @@ PACKAGE = Path(__file__).resolve().parents[1] / "random_cut_forest_by_aws_spark"
 ALLOWED = {("session.py", "local_frame"), ("operators/schema.py", "_parse")}
 
 
+def _package_trees():
+    """(path relative to the package, parsed module) for every package file."""
+    for path in sorted(PACKAGE.rglob("*.py")):
+        yield path.relative_to(PACKAGE).as_posix(), ast.parse(path.read_text())
+
+
 def test_no_create_dataframe_outside_local_frame():
     """``createDataFrame(<list>)`` costs Python-worker tasks on every read
     of the result; small driver-built tables go through ``local_frame``.
     The only other call is schema.py's DDL-parse fallback, which never
     reads rows."""
     found = set()
-    for path in sorted(PACKAGE.rglob("*.py")):
-        rel = path.relative_to(PACKAGE).as_posix()
-        tree = ast.parse(path.read_text())
+    for rel, tree in _package_trees():
         owner = {}  # node -> innermost enclosing function (walk is outer-first)
         for fn in ast.walk(tree):
             if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
@@ -148,3 +152,50 @@ def test_no_create_dataframe_outside_local_frame():
                 found.add((rel, owner.get(node, "<module>")))
     assert ("session.py", "local_frame") in found
     assert found - ALLOWED == set(), found - ALLOWED
+
+
+# the only environment variables the package may read
+ENV_ALLOWED = {
+    "RCF_FORCE_PY",  # pure-Python forest path (no gcc; parity tests)
+    "SPARK_GRAFT_CPUS",
+    "SPARK_DRIVER_MEM",
+    "SPARK_GRAFT_DRIFT_PROFILE",  # drift per-task phase timers
+}
+
+
+def _is_os_attr(node, *names) -> bool:
+    return (isinstance(node, ast.Attribute) and node.attr in names
+            and isinstance(node.value, ast.Name) and node.value.id == "os")
+
+
+def test_package_reads_only_known_env_vars():
+    """A second implementation belongs under ``tests/`` as a parity
+    oracle, not behind an env-var switch in the shipped path: the
+    package reads only the variables in ``ENV_ALLOWED``, each by a
+    literal name through ``os.environ`` or ``os.getenv``."""
+    found, refs, keyed = set(), 0, 0
+    for rel, tree in _package_trees():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module == "os":
+                assert not {a.name for a in node.names} & {"environ", "getenv"}, rel
+            if _is_os_attr(node, "environ", "getenv"):
+                refs += 1
+            key = None
+            if isinstance(node, ast.Call) and node.args and (
+                _is_os_attr(node.func, "getenv")
+                or (isinstance(node.func, ast.Attribute)
+                    and _is_os_attr(node.func.value, "environ"))
+            ):
+                key = node.args[0]
+            elif isinstance(node, ast.Subscript) and _is_os_attr(node.value, "environ"):
+                key = node.slice
+            elif (isinstance(node, ast.Compare) and len(node.comparators) == 1
+                  and _is_os_attr(node.comparators[0], "environ")):
+                key = node.left
+            if key is not None:
+                keyed += 1
+                found.add((rel, key.value if isinstance(key, ast.Constant) else "<dynamic>"))
+    # every os.environ / os.getenv reference was a keyed read by name
+    assert keyed == refs, (keyed, refs)
+    assert {k for _, k in found} - ENV_ALLOWED == set(), sorted(found)
+    assert ("core/forest.py", "RCF_FORCE_PY") in found
