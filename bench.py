@@ -9,8 +9,8 @@ Prints ONE JSON line:
 The headline metric is the full validation-suite throughput (stats +
 uniqueness + referential + token invariants + RCF drift) over the
 deterministic tokenized-sequence table (BASELINE.json input_hint shape).
-Scaling evidence across parallelism levels is produced by
-scripts/bench_scaling.py which runs this file at two CPU counts.
+This is the legacy one-line contract; the benchmark with bounds and
+per-layer metrics is perfbench/run.py (see BENCHMARK.json).
 """
 
 from __future__ import annotations
@@ -116,10 +116,10 @@ def main() -> None:
     n_tokens = seqs.agg(F.sum("n_tok")).collect()[0][0]
     dim = sources_dim(spark)
 
-    # rows_per_bucket is intentionally independent of cpus: the scaling
-    # comparison (bench_scaling.py) must run the IDENTICAL job at both
-    # parallelism levels. ~160 groups at 2M rows ⇒ tasks ≫ cores at both
-    # levels (no wave quantization).
+    # rows_per_bucket is intentionally independent of cpus: runs at
+    # different parallelism levels must run the IDENTICAL job. ~160
+    # groups at 2M rows ⇒ tasks ≫ cores at both levels (no wave
+    # quantization).
     drift_cfg = DriftConfig(num_trees=30, sample_size=256, rows_per_bucket=12_500)
 
     # warm the Python worker pool + JIT before timing anything
@@ -161,8 +161,8 @@ def main() -> None:
     )
     suite_attempts = []
     suite_windows: list[list[float]] = []  # [epoch_start, epoch_end] per run,
-    # so an external capacity tracer (scripts/bench_scaling.py) can window
-    # its samples to exactly the measured suite interval
+    # so an external capacity tracer can window its samples to exactly
+    # the measured suite interval
     phase_rows_per_run: list[list] = []
     # default 2 back-to-back runs: run2/run1 bounds in-session variance
     # (contamination + window drift) inside ONE committed artifact
@@ -353,9 +353,8 @@ def main() -> None:
             # the full curation composition (plans/pipeline.py): funnel →
             # minhash/Jaccard keep-one dedup → cluster-keyed splits →
             # packing, forced through one aggregate over the packed train
-            # output (scale evidence at 1M/4M lives in
-            # scripts/bench_pipeline_scale.py; this tracks the composition
-            # overhead at the driver's sf)
+            # output (this tracks the composition overhead at the
+            # driver's sf)
             from random_cut_forest_by_aws_spark.plans import (
                 CurationConfig, curate_corpus,
             )

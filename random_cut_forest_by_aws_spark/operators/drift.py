@@ -29,11 +29,16 @@ builds it) — the reference's dense fixed-width point
 time, so no probe job runs and any other type raises ``TypeError``
 before a job starts.
 
-Checkpoint/resume (north_rule d): with ``checkpoint_dir`` set, each group
-saves forest+thresholder+normalizer state keyed by group; a re-run skips
+Checkpoint/resume (north_rule d): with ``checkpoint_dir`` set, each
+``(group, bucket)`` partition saves forest+thresholder+normalizer state
+keyed by that pair (``_checkpoint_path``); a re-run skips
 already-processed rows (seq ≤ saved watermark) and continues the sketch —
 bit-identical to an uninterrupted run (tested), mirroring the reference's
 state-mapper round-trips (``state/RandomCutForestMapper.java:118,209``).
+Resume is bit-exact only while the bucket layout holds: pin ``buckets``
+for resumable runs. Adaptive bucket counts re-key the rows when appended
+rows push a group across a multiple of ``rows_per_bucket``, and the
+re-keyed buckets no longer match their saved state.
 """
 
 from __future__ import annotations
@@ -193,6 +198,27 @@ def _transform_chunk(
         updated = True
     xn = norm.transform(base) if tf["do_stat"] else base.astype(np.float32)
     return base, real, xn, raw_last, updated
+
+
+def _shingle_points(
+    tail: np.ndarray, xn: np.ndarray, s_sh: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Shared shingle builder: returns (pts, row_map, new_tail). Forest
+    points are windows of the last ``s_sh`` transformed rows, carried
+    across chunks by ``tail`` (the last ``s_sh - 1`` rows); ``row_map[i]``
+    is the ``xn`` row that ends point ``i``. Rows before the first full
+    shingle map to no point (ShingleBuilder warm-up)."""
+    if s_sh <= 1:
+        return xn, np.arange(len(xn), dtype=np.int64), tail
+    cat = np.vstack([tail, xn]) if len(tail) else xn
+    if len(cat) >= s_sh:
+        win = np.lib.stride_tricks.sliding_window_view(cat, (s_sh, cat.shape[1]))[:, 0]
+        pts = np.ascontiguousarray(win.reshape(-1, s_sh * cat.shape[1]), np.float32)
+        row_map = np.arange(len(pts), dtype=np.int64) + (s_sh - 1 - len(tail))
+    else:
+        pts = np.zeros((0, s_sh * cat.shape[1]), np.float32)
+        row_map = np.zeros(0, np.int64)
+    return pts, row_map, cat[max(0, len(cat) - (s_sh - 1)):].copy()
 
 
 def _feature_columns(df: DataFrame, feature_col: str) -> tuple[list[str], list[Column]]:
@@ -555,21 +581,8 @@ def _make_drift_fn(group_cols: list[str], order_col: str, feature_cols: list[str
     ]
 
     def fn(key, pdf):
-        import time as _time
-
         import pandas as pd
 
-        # per-phase wall profiling (SPARK_GRAFT_DRIFT_PROFILE=<dir>): each
-        # task appends one JSON of accumulated phase seconds — the
-        # feedback loop for "where do drift's seconds go" (aggregated by
-        # scripts/profile_drift.py). Zero overhead when unset.
-        prof_dir = os.environ.get("SPARK_GRAFT_DRIFT_PROFILE")
-        prof: dict | None = {} if prof_dir else None
-
-        def _acc(name: str, t0: float) -> None:
-            prof[name] = prof.get(name, 0.0) + (_time.perf_counter() - t0)
-
-        t_all = _time.perf_counter() if prof is not None else 0.0
         pdf = pdf.sort_values(order_col, kind="mergesort")
         # range-blocked STREAMING_IMPUTE: the previous non-empty block's
         # last (seq, features) row travels with this block as a marked
@@ -736,12 +749,9 @@ def _make_drift_fn(group_cols: list[str], order_col: str, feature_cols: list[str
                 return
             chunk = X[lo:hi]
             imp = imputed[lo:hi]
-            t0 = _time.perf_counter() if prof is not None else 0.0
             base, real, xn, raw_last, updated = _transform_chunk(
                 tf, chunk, imp, norm, extras["tlast"]
             )
-            if prof is not None:
-                _acc("transform", t0)
             if (
                 cfg.mode == "streaming_impute"
                 and cfg.impute_method == "rcf"
@@ -767,34 +777,14 @@ def _make_drift_fn(group_cols: list[str], order_col: str, feature_cols: list[str
                         forest, xn[j], all_dims, seed=int(seqs[lo + j]),
                         max_leaves_per_tree=8,
                     )
-            # shingling: forest points are windows of the last s_sh
-            # transformed rows; rows before the first full shingle (stream
-            # start) are consumed without scoring or updating
-            # (ShingleBuilder warm-up)
-            if s_sh > 1:
-                tail = extras["sh_tail"]
-                cat = np.vstack([tail, xn]) if len(tail) else xn
-                if len(cat) >= s_sh:
-                    pts = np.ascontiguousarray(
-                        np.lib.stride_tricks.sliding_window_view(
-                            cat, (s_sh, cat.shape[1])
-                        )[:, 0].reshape(-1, s_sh * cat.shape[1]),
-                        np.float32,
-                    )
-                    row_map = np.arange(len(pts), dtype=np.int64) + (
-                        s_sh - 1 - len(tail)
-                    )
-                else:
-                    pts = np.zeros((0, s_sh * cat.shape[1]), np.float32)
-                    row_map = np.zeros(0, np.int64)
-                extras["sh_tail"] = cat[max(0, len(cat) - (s_sh - 1)):].copy()
-            else:
-                pts = xn
-                row_map = np.arange(len(chunk), dtype=np.int64)
+            # rows before the first full shingle (stream start) are
+            # consumed without scoring or updating
+            pts, row_map, extras["sh_tail"] = _shingle_points(
+                extras["sh_tail"], xn, s_sh
+            )
             imp_p = imp[row_map]
             seq_p = seqs[lo:hi][row_map]
             if forest.is_output_ready and len(pts):
-                t0 = _time.perf_counter() if prof is not None else 0.0
                 ds = None
                 if cfg.scoring == "distance":
                     # ScoringStrategy.DISTANCE: the directional-distance
@@ -810,9 +800,6 @@ def _make_drift_fn(group_cols: list[str], order_col: str, feature_cols: list[str
 
                         dres = _density_q(forest, pts)
                         ds = (dres["dist_high"] + dres["dist_low"]).sum(1)
-                if prof is not None:
-                    _acc("score", t0)
-                    t0 = _time.perf_counter()
                 flagged: list[tuple] = []
                 recall_emit: list[tuple] = []
                 real_pos = np.flatnonzero(~imp_p)
@@ -878,9 +865,6 @@ def _make_drift_fn(group_cols: list[str], order_col: str, feature_cols: list[str
                             (int(real_pos[i]), float(rs[i]),
                              float(thr_arr[i]), float(grade_arr[i]))
                         )
-                if prof is not None:
-                    _acc("threshold", t0)
-                    t0 = _time.perf_counter()
                 if flagged:
                     if corrector is not None and s_sh > 1:
                         # slot-aware shingle analysis: the spike sliding
@@ -948,9 +932,6 @@ def _make_drift_fn(group_cols: list[str], order_col: str, feature_cols: list[str
                     extras["n_anomalous"] += 1
                     if seq > emit_wm:
                         anomalies.append((seq, s2, t2, g2))
-                if prof is not None:
-                    _acc("corrector", t0)
-            t0 = _time.perf_counter() if prof is not None else 0.0
             if do_stat and not updated and len(real):
                 norm.update(real)
             if imp.any():
@@ -973,8 +954,6 @@ def _make_drift_fn(group_cols: list[str], order_col: str, feature_cols: list[str
                     forest.update_batch(pts, seqs=seq_p)
             extras["n_rows"] += hi - lo
             extras["tlast"] = raw_last
-            if prof is not None:
-                _acc("update", t0)
 
         chunks = []
         pos = 0
@@ -1002,18 +981,6 @@ def _make_drift_fn(group_cols: list[str], order_col: str, feature_cols: list[str
             process(tail_lo, B)
             if B:
                 extras["last_seq"] = int(seqs[-1])
-
-        if prof is not None:
-            prof["task_total"] = _time.perf_counter() - t_all
-            prof["n_rows"] = float(len(X))
-            os.makedirs(prof_dir, exist_ok=True)
-            tag = hashlib.blake2b(
-                "\x1f".join(str(k) for k in key).encode(), digest_size=6
-            ).hexdigest()
-            with open(os.path.join(prof_dir, f"task-{os.getpid()}-{tag}.json"), "w") as fh:
-                import json as _json
-
-                _json.dump(prof, fh)
 
         keyvals = list(key)
         rows = [
@@ -1196,8 +1163,11 @@ def drift_scores(
                 )
             else:
                 # high-cardinality groups: broadcast-join the aggregated
-                # counts (still no raw-row collect)
-                counts = counts.cache()
+                # counts (still no raw-row collect). localCheckpoint runs
+                # the counts once for both the sum and the join; cache()
+                # would leave a CacheManager entry that every later query
+                # in the session re-canonicalizes against.
+                counts = counts.localCheckpoint(eager=True)
                 total_buckets = int(counts.agg(F.sum("__nb").alias("b")).first()["b"] or 0)
                 bucketed = (
                     df.join(F.broadcast(counts), gcols, "left")

@@ -42,6 +42,7 @@ from ..operators.drift import (
     _load_group_state,
     _Normalizer,
     _resolve_transform,
+    _shingle_points,
     _state_dict,
     _transform_chunk,
 )
@@ -169,25 +170,7 @@ def streaming_drift_scores(
                 # the last s−1 transformed rows rides the state blob, so
                 # windows spanning micro-batch boundaries score exactly
                 # like an unbroken stream
-                if s_sh > 1:
-                    cat = np.vstack([sh_tail, xn]) if len(sh_tail) else xn
-                    if len(cat) >= s_sh:
-                        pts = np.ascontiguousarray(
-                            np.lib.stride_tricks.sliding_window_view(
-                                cat, (s_sh, cat.shape[1])
-                            )[:, 0].reshape(-1, s_sh * cat.shape[1]),
-                            np.float32,
-                        )
-                        row_map = np.arange(len(pts), dtype=np.int64) + (
-                            s_sh - 1 - len(sh_tail)
-                        )
-                    else:
-                        pts = np.zeros((0, s_sh * cat.shape[1]), np.float32)
-                        row_map = np.zeros(0, np.int64)
-                    sh_tail = cat[max(0, len(cat) - (s_sh - 1)):].copy()
-                else:
-                    pts = xn
-                    row_map = np.arange(len(chunk), dtype=np.int64)
+                pts, row_map, sh_tail = _shingle_points(sh_tail, xn, s_sh)
                 sq_p = sq[row_map]
                 if forest.is_output_ready and len(pts):
                     scores = forest.score(pts)

@@ -198,7 +198,8 @@ def test_time_augmented_range_blocked_cadence(spark):
 def test_adaptive_bucketing_join_fallback_multi_group_cols(spark, seqs):
     """Multi-column group keys take the broadcast-join counts path (the
     literal-map inline only applies to single low-cardinality keys);
-    verdicts must match the single-column run's totals."""
+    verdicts must match the single-column run's totals, and the counts
+    leave no entry registered with the CacheManager."""
     from pyspark.sql import functions as F
 
     from random_cut_forest_by_aws_spark.functions import token_features
@@ -206,6 +207,8 @@ def test_adaptive_bucketing_join_fallback_multi_group_cols(spark, seqs):
         DriftConfig, drift_scores,
     )
 
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    n_cached = cache_manager.cachedData().size()  # an immutable snapshot
     feat = seqs.withColumn("features", token_features()).withColumn(
         "g2", F.lit("x")
     ).select("source", "g2", "seq", "features")
@@ -215,6 +218,7 @@ def test_adaptive_bucketing_join_fallback_multi_group_cols(spark, seqs):
     agg = s.agg(F.sum("n_rows").alias("n"), F.sum("n_scored").alias("ns")).first()
     assert agg["n"] == seqs.count()
     assert agg["ns"] > 0
+    assert cache_manager.cachedData().size() == n_cached
 
 
 def test_drift_verdicts_null_mean_score_when_group_scores_nothing(spark):

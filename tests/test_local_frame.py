@@ -159,7 +159,6 @@ ENV_ALLOWED = {
     "RCF_FORCE_PY",  # pure-Python forest path (no gcc; parity tests)
     "SPARK_GRAFT_CPUS",
     "SPARK_DRIVER_MEM",
-    "SPARK_GRAFT_DRIFT_PROFILE",  # drift per-task phase timers
 }
 
 
@@ -199,3 +198,19 @@ def test_package_reads_only_known_env_vars():
     assert keyed == refs, (keyed, refs)
     assert {k for _, k in found} - ENV_ALLOWED == set(), sorted(found)
     assert ("core/forest.py", "RCF_FORCE_PY") in found
+
+
+def test_package_makes_no_cache_call():
+    """Never ``cache()`` a check output or a planning table: each cached
+    plan stays registered with the CacheManager, which re-canonicalizes
+    it against every later query in the session. Intermediates computed
+    once are truncated with ``localCheckpoint``; ``persist()`` only where
+    an ``unpersist()`` releases it."""
+    found = sorted(
+        (rel, node.lineno)
+        for rel, tree in _package_trees()
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "cache"
+    )
+    assert found == [], found
