@@ -303,7 +303,7 @@ def _q_ivf_cosine_full(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = ivf_cosine_topk(emb, queries, dim=64, k=10, n_lists=8, n_probe=8)
+    out = ivf_cosine_topk(emb, queries, k=10, n_lists=8, n_probe=8)
     return out.select(
         "query_id", "vec_id", F.round("cosine", 5).alias("cosine"),
         F.col("rank").cast("bigint").alias("rank"),

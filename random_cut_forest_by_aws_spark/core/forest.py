@@ -1353,32 +1353,32 @@ class RCFForest:
     # insert/delete, property-tested in tests/test_forest_properties.py)
     _COMPACT_DROP = ("bbmin", "bbmax")
 
-    def to_state(self, compact: bool = True) -> dict:
+    def to_state(self) -> dict:
         """Checkpoint dict (NumPy arrays only, npz-safe).
 
-        ``compact=True`` (default) replaces the dense per-tree box arrays
-        (2·T·2K·d float32 — the dominant term) with the shared point
-        store: distinct leaf points stored ONCE across all trees plus an
-        int index per sampler slot and the reference counts
+        The dense per-tree box arrays (2·T·2K·d float32 — the dominant
+        term) are replaced with the shared point store: distinct leaf
+        points stored ONCE across all trees plus an int index per
+        sampler slot and the reference counts
         (store/PointStore.java:69,197-255). Internal-node boxes are
-        rebuilt bit-exactly on load as bottom-up child unions.
+        rebuilt bit-exactly on load as bottom-up child unions;
+        ``from_state`` still loads the legacy dense format.
         """
-        fields = [f for f in self._ARRAY_FIELDS if not (compact and f in self._COMPACT_DROP)]
+        fields = [f for f in self._ARRAY_FIELDS if f not in self._COMPACT_DROP]
         state = {f: getattr(self, f).copy() for f in fields}
-        if compact:
-            points, _refcount, slot_idx = self.point_store()
-            state["ps_points"] = points
-            # refcounts are NOT serialized: derivable as
-            # bincount(ps_slot_idx), and every byte here ships in one
-            # checkpoint per (group, bucket) — point_store() returns
-            # them for callers who want the explicit view
-            state["ps_slot_idx"] = slot_idx.astype(np.int32)
-            if self.N <= np.iinfo(np.int16).max:
-                # node ids < N and masses <= K fit int16; from_state's
-                # array assignment upcasts back to the in-memory int32
-                for name in ("parent", "left", "right", "cutdim", "mass",
-                             "freelist", "sleaf", "root", "freetop", "ssize"):
-                    state[name] = state[name].astype(np.int16)
+        points, _refcount, slot_idx = self.point_store()
+        state["ps_points"] = points
+        # refcounts are NOT serialized: derivable as
+        # bincount(ps_slot_idx), and every byte here ships in one
+        # checkpoint per (group, bucket) — point_store() returns
+        # them for callers who want the explicit view
+        state["ps_slot_idx"] = slot_idx.astype(np.int32)
+        if self.N <= np.iinfo(np.int16).max:
+            # node ids < N and masses <= K fit int16; from_state's
+            # array assignment upcasts back to the in-memory int32
+            for name in ("parent", "left", "right", "cutdim", "mass",
+                         "freelist", "sleaf", "root", "freetop", "ssize"):
+                state[name] = state[name].astype(np.int16)
         rng_states = []
         for g in self._rngs:
             s = g.bit_generator.state["state"]

@@ -14,7 +14,7 @@ one point (``util/ShingleBuilder.java:27-48``; internal shingling
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
@@ -80,8 +80,3 @@ def flatten_vector_shingle(
         F.size("_nested") == shingle_size
     )
     return out.withColumn(out_col, F.flatten("_nested")).drop("_nested")
-
-
-def shingle_expr(values: Column) -> Column:
-    """Identity helper for symmetry with the reference API surface."""
-    return values

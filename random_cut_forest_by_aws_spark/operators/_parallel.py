@@ -17,9 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def ensure_compute_parallelism(df: DataFrame, factor: int = 2) -> DataFrame:
+def ensure_compute_parallelism(df: DataFrame) -> DataFrame:
     """Repartition ``df`` to ``defaultParallelism`` iff its physical
-    plan yields fewer than ``defaultParallelism / factor`` partitions.
+    plan yields at most ``defaultParallelism / 2`` partitions.
 
     Planning-only probe (no job): the scan's partition count comes from
     the already-listed file splits. Falls back to returning ``df``
@@ -30,6 +30,6 @@ def ensure_compute_parallelism(df: DataFrame, factor: int = 2) -> DataFrame:
         n = df.rdd.getNumPartitions()
     except Exception:
         return df
-    if n * factor <= dp:
+    if n * 2 <= dp:
         return df.repartition(dp)
     return df

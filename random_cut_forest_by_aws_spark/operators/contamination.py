@@ -13,18 +13,16 @@ n-gram eval set:
   explode) fused into the scan, followed by a broadcast LEFT SEMI match
   and a per-doc count whose partial aggregation happens map-side (the
   only exchange carries one row per contaminated doc, not per n-gram);
-* ``hash_ngrams=True`` joins on ``xxhash64(gram)`` longs instead of the
-  gram strings — 8× narrower shuffle rows at equal semantics (collision
-  odds ~1e-9 at 10^7 eval grams). The exact-string mode exists for
-  oracle verification.
+* the join key is ``xxhash64`` of each gram's word tuple, a long instead
+  of the gram string — 8× narrower shuffle rows at equal semantics
+  (collision odds ~1e-9 at 10^7 eval grams). The exact-string gram join
+  is the parity oracle in ``tests/test_pipeline_ops.py``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .textqc import _word_ngrams
 
 
 def ngram_contamination(
@@ -33,7 +31,6 @@ def ngram_contamination(
     n: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_ngrams: bool = True,
 ) -> DataFrame:
     """Per-corpus-document overlap with the eval set's n-grams.
 
@@ -49,32 +46,27 @@ def ngram_contamination(
     # input would run it on one core (no-op on multi-split inputs)
     corpus = ensure_compute_parallelism(corpus)
     words = F.split(F.col(text_col), " ")
-    if hash_ngrams:
-        # Hash the word TUPLE directly (xxhash64 chains its arguments)
-        # instead of building the space-joined gram string and hashing
-        # that: same join semantics — split(text, ' ') words never
-        # contain the joiner, so tuple <-> string is a bijection and
-        # the hash key is 1:1 with the gram — without allocating ~n
-        # words of string per position. The driver-gate oracle
-        # recomputes overlaps on gram STRINGS, certifying this hashed
-        # join collision-free on the fixture.
-        size = F.size(words)
-        hashed = F.transform(
-            F.sequence(F.lit(1), size - F.lit(n - 1)),
-            lambda i: F.xxhash64(
-                *[F.element_at(words, i + F.lit(j)) for j in range(n)]
-            ),
-        )
-        gram_arr = F.when(size >= F.lit(n), hashed).otherwise(
-            F.array().cast("array<bigint>")
-        )
-        gram_col = F.explode(gram_arr).alias("gram")
-        eval_grams = eval_docs.select(gram_col).distinct()
-        corpus_grams = corpus.select(F.col(id_col), gram_col)
-    else:
-        gram_col = F.explode(_word_ngrams(words, n)).alias("gram")
-        eval_grams = eval_docs.select(gram_col).distinct()
-        corpus_grams = corpus.select(F.col(id_col), gram_col)
+    # Hash the word TUPLE directly (xxhash64 chains its arguments)
+    # instead of building the space-joined gram string and hashing
+    # that: same join semantics — split(text, ' ') words never
+    # contain the joiner, so tuple <-> string is a bijection and
+    # the hash key is 1:1 with the gram — without allocating ~n
+    # words of string per position. The driver-gate oracle
+    # recomputes overlaps on gram STRINGS, certifying this hashed
+    # join collision-free on the fixture.
+    size = F.size(words)
+    hashed = F.transform(
+        F.sequence(F.lit(1), size - F.lit(n - 1)),
+        lambda i: F.xxhash64(
+            *[F.element_at(words, i + F.lit(j)) for j in range(n)]
+        ),
+    )
+    gram_arr = F.when(size >= F.lit(n), hashed).otherwise(
+        F.array().cast("array<bigint>")
+    )
+    gram_col = F.explode(gram_arr).alias("gram")
+    eval_grams = eval_docs.select(gram_col).distinct()
+    corpus_grams = corpus.select(F.col(id_col), gram_col)
 
     totals = corpus.select(
         F.col(id_col),

@@ -65,7 +65,6 @@ def snapshot_diff(
     keys: Sequence[str] | str,
     compare_cols: Sequence[str] | None = None,
     include_unchanged: bool = False,
-    prepartition: bool = True,
 ) -> DataFrame:
     """Row-level diff of two snapshots keyed by ``keys``.
 
@@ -94,19 +93,18 @@ def snapshot_diff(
             *[F.xxhash64(F.col(c)).alias(f"__h_{c}") for c in compare_cols],
         )
 
-    tagged = side(base, 0).unionByName(side(curr, 1))
-    if prepartition:
-        # Reconciliation keys are near-unique (≤ 1 row per side), so a
-        # map-side partial aggregate reduces nothing while its hash map
-        # grows to task-input size — with 2 + 2k buffers it tips into
-        # the sort/spill fallback and turns superlinear (measured 8.8 →
-        # 52.6 s from 2M → 8M keys at k=4). Shuffling the raw hash rows
-        # first costs the same exchange volume (partial agg wasn't
-        # reducing it) and keeps the whole aggregate post-shuffle:
-        # 6.6 → 11.3 s on the same inputs. Set prepartition=False only
-        # for dup-heavy multiset diffs where keys repeat enough for
-        # map-side combine to pay.
-        tagged = tagged.repartition(*[F.col(k) for k in keys])
+    # Reconciliation keys are near-unique (≤ 1 row per side), so a
+    # map-side partial aggregate reduces nothing while its hash map
+    # grows to task-input size — with 2 + 2k buffers it tips into
+    # the sort/spill fallback and turns superlinear (measured 8.8 →
+    # 52.6 s from 2M → 8M keys at k=4). Shuffling the raw hash rows
+    # first costs the same exchange volume (partial agg wasn't
+    # reducing it) and keeps the whole aggregate post-shuffle:
+    # 6.6 → 11.3 s on the same inputs.
+    tagged = (
+        side(base, 0).unionByName(side(curr, 1))
+        .repartition(*[F.col(k) for k in keys])
+    )
 
     aggs = [
         F.sum(F.when(F.col("__side") == 0, 1).otherwise(0))
@@ -163,13 +161,11 @@ def snapshot_diff_summary(
     curr: DataFrame,
     keys: Sequence[str] | str,
     compare_cols: Sequence[str] | None = None,
-    prepartition: bool = True,
 ) -> DataFrame:
     """Reconciliation scorecard: one row per status with the key count
     and the total row count on each side — the aggregate a validation
     verdict thresholds on (e.g. churn ≤ x%, zero duplicate keys)."""
-    d = snapshot_diff(base, curr, keys, compare_cols,
-                      include_unchanged=True, prepartition=prepartition)
+    d = snapshot_diff(base, curr, keys, compare_cols, include_unchanged=True)
     return d.groupBy("status").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_keys"),
         F.sum("cnt_base").cast("bigint").alias("rows_base"),

@@ -66,16 +66,13 @@ class DriftConfig:
     seed: int = 42
     chunk_size: int = 4096
     z_factor: float = 3.0  # per-row thresholder (violation rows)
-    normalize: bool = True
     norm_discount: float = 0.0  # cumulative stats ⇒ stable baseline coords
     clip_factor: float = 100.0
     # TransformMethod parity (config/TransformMethod.java): 'none',
     # 'normalize', 'difference', 'normalize_difference', 'weighted'
     # (WeightedTransformer.java:44,174), 'subtract_ma'
     # (SubtractMATransformer.java — discounted moving average removed).
-    # ``normalize`` above is kept for back-compat and means 'normalize'
-    # when True.
-    transform: str | None = None
+    transform: str = "normalize"
     transform_weights: tuple | None = None  # WEIGHTED: per-dim multipliers
     # ForestMode parity (config/ForestMode.java): 'standard',
     # 'time_augmented' (the order_col gap appended as an extra feature
@@ -139,7 +136,6 @@ class DriftConfig:
     # DATA_DRIFT, not a new anomaly. Fixes mis-tuned suppression when
     # per-dim noise floors differ by orders of magnitude.
     auto_adjust: bool = False
-    anomaly_rate_threshold: float = 0.01
     # skew handling: a group never exceeds ~rows_per_bucket rows; bucket
     # count per group value adapts to its frequency, capped at max_buckets.
     # buckets=N forces exactly N buckets for every group (tests/back-compat).
@@ -152,14 +148,13 @@ class DriftConfig:
 def _resolve_transform(cfg: "DriftConfig", d: int) -> dict:
     """TransformMethod resolution shared by the batch and streaming
     operators (they previously diverged — normalize-only streaming)."""
-    method = cfg.transform or ("normalize" if cfg.normalize else "none")
-    do_norm = method in ("normalize", "normalize_difference")
-    do_sub = method == "subtract_ma"
+    do_norm = cfg.transform in ("normalize", "normalize_difference")
+    do_sub = cfg.transform == "subtract_ma"
     return {
         "do_norm": do_norm,
-        "do_diff": method in ("difference", "normalize_difference"),
+        "do_diff": cfg.transform in ("difference", "normalize_difference"),
         "do_sub": do_sub,
-        "do_weight": method == "weighted",
+        "do_weight": cfg.transform == "weighted",
         "do_stat": do_norm or do_sub,
         "weights": (
             np.asarray(cfg.transform_weights, np.float64)
@@ -1030,7 +1025,7 @@ def drift_scores(
         raise ValueError(f"unknown ImputationMethod {cfg.impute_method!r}")
     _METHODS = ("none", "normalize", "difference", "normalize_difference",
                 "weighted", "subtract_ma")
-    if cfg.transform is not None and cfg.transform not in _METHODS:
+    if cfg.transform not in _METHODS:
         raise ValueError(f"unknown TransformMethod {cfg.transform!r}")
     if cfg.shingle_size < 1:
         raise ValueError("shingle_size must be >= 1")
@@ -1110,8 +1105,9 @@ def drift_scores(
         # None the bucket count adapts per group value (ceil(rows/rows_per_
         # bucket), capped): the hot key (web ≈ 80%) splits into many bounded
         # tasks while small keys keep one warm forest instead of many cold
-        # ones. The per-key count is computed distributively and joined
-        # back (no driver-side collect — group_cols may be high-cardinality).
+        # ones. The per-key counts are aggregated on the executors; the
+        # driver collects at most 1,001 of those aggregated rows, and
+        # past 1,000 groups the counts are broadcast-joined back instead.
         if cfg.buckets is not None:
             total_buckets = cfg.buckets
             bucketed = df.select(
@@ -1144,14 +1140,16 @@ def drift_scores(
                 # small group cardinality (the common case: group = source
                 # with tens of values): inline the per-group bucket count
                 # as a literal map — no join, no second broadcast
-                total_buckets = sum(int(r["__nb"]) for r in rows)
-                kv: list = []
-                for r in rows:
-                    kv.extend([F.lit(r[gcols[0]]), F.lit(int(r["__nb"]))])
-                # try_element_at: ANSI-safe on a missing/null key (the
-                # driver gate runs with spark.sql.ansi.enabled=true)
+                nbs = {r[gcols[0]]: int(r["__nb"]) for r in rows}
+                total_buckets = sum(nbs.values())
+                # a map key cannot be null: the null group's count is the
+                # lookup's default instead
+                null_nb = nbs.pop(None, 1)
+                kv = [F.lit(x) for kv_pair in nbs.items() for x in kv_pair]
+                # try_element_at: ANSI-safe on a null key (the driver
+                # gate runs with spark.sql.ansi.enabled=true)
                 nb_col = F.coalesce(
-                    F.try_element_at(F.create_map(*kv), F.col(gcols[0])), F.lit(1)
+                    F.try_element_at(F.create_map(*kv), F.col(gcols[0])), F.lit(null_nb)
                 )
                 bucketed = df.select(
                     *gcols,
@@ -1169,8 +1167,11 @@ def drift_scores(
                 # in the session re-canonicalizes against.
                 counts = counts.localCheckpoint(eager=True)
                 total_buckets = int(counts.agg(F.sum("__nb").alias("b")).first()["b"] or 0)
+                # null-safe keys, so a null group finds its own count
+                counts = counts.toDF(*[f"__k{i}" for i in range(len(gcols))], "__nb")
+                on = [F.col(g).eqNullSafe(F.col(f"__k{i}")) for i, g in enumerate(gcols)]
                 bucketed = (
-                    df.join(F.broadcast(counts), gcols, "left")
+                    df.join(F.broadcast(counts), on, "left")
                     .select(
                         *gcols,
                         F.pmod(

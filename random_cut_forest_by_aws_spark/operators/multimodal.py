@@ -130,12 +130,13 @@ def _decode_stub(payload: bytes, mime: str) -> np.ndarray:
     return hist / max(arr.size, 1)
 
 
-def decode_features(df: DataFrame, batch_size: int = 1024, precise: bool = False) -> DataFrame:
+def decode_features(df: DataFrame, precise: bool = False) -> DataFrame:
     """binary payload → float feature vector via mapInPandas (Arrow
     batches; payloads never land in driver memory; executors stream
-    batches of ``batch_size`` rows). ``precise=True`` keeps float64
-    features (exact p/q rationals — oracle-comparable); default float32
-    matches production embedding width."""
+    batches of ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows).
+    ``precise=True`` keeps float64 features (exact p/q rationals —
+    oracle-comparable); default float32 matches production embedding
+    width."""
     ftype = "double" if precise else "float"
     out_schema = f"doc_id string, mime string, features array<{ftype}>"
     np_t = np.float64 if precise else np.float32

@@ -1,11 +1,11 @@
 """Referential constraint via broadcast anti-join (north_rule b).
 
-The dimension side (valid key set) is broadcast — at 10^12 fact rows the
-anti-join then runs map-side with zero shuffle of the fact table, and the
-parquet/Iceberg scan still benefits from column pruning (only the FK
-columns are read). For dimensions too large to broadcast the same API
-degrades gracefully to a shuffled anti-join where AQE's skew-join
-splitting handles hot FK values.
+The dimension side (valid key set) is always broadcast — at 10^12 fact
+rows the anti-join then runs map-side with zero shuffle of the fact
+table, and the parquet/Iceberg scan still benefits from column pruning
+(only the FK columns are read). The hint holds whatever the dimension's
+size: a dimension too large for driver and executor memory fails the
+broadcast instead of falling back to a shuffled anti-join.
 """
 
 from __future__ import annotations
@@ -21,7 +21,6 @@ def referential_violations(
     dim: DataFrame,
     fact_keys: Sequence[str],
     dim_keys: Sequence[str] | None = None,
-    use_broadcast: bool = True,
 ) -> DataFrame:
     """Distinct violating foreign-key values with their row counts.
 
@@ -43,9 +42,7 @@ def referential_violations(
         .agg(F.count(F.lit(1)).alias("fact_rows"))
     )
     dim_side = dim.select(*[F.col(d).alias(f) for d, f in zip(dim_keys, fact_keys)]).distinct()
-    if use_broadcast:
-        dim_side = F.broadcast(dim_side)
-    return fk_counts.join(dim_side, on=fact_keys, how="left_anti")
+    return fk_counts.join(F.broadcast(dim_side), on=fact_keys, how="left_anti")
 
 
 def referential_verdict(

@@ -127,7 +127,6 @@ def _kmeans_centroids(
 def ivf_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    dim: int,
     k: int = 10,
     n_lists: int = 16,
     n_probe: int = 4,

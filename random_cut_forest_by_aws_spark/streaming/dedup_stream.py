@@ -39,14 +39,3 @@ def streaming_dedup(
     return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
         list(keys)
     )
-
-
-def streaming_dedup_exact(
-    stream: DataFrame, keys: Sequence[str] = ("doc_id",)
-) -> DataFrame:
-    """Unbounded exact dedup — every key ever seen stays in state. Only
-    for finite backfills replayed through the streaming path; for
-    unbounded streams use :func:`streaming_dedup` (the state store of
-    this variant grows with total distinct keys, which at 10^12
-    documents is not a state store, it's a database)."""
-    return stream.dropDuplicates(list(keys))

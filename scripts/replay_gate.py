@@ -16,14 +16,14 @@ Exit 0 iff every oracle matches and every rows-only query runs.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
-
-sys.path.insert(0, "/root/repo")
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -62,6 +62,13 @@ def main() -> int:
                     help="comma-separated query names (default: all)")
     args = ap.parse_args()
 
+    # replay the checkout this script lives in, whatever the working
+    # directory: on the driver's path and, through PYTHONPATH, on the
+    # Python workers' path (UDFs import the package there)
+    root = str(Path(__file__).resolve().parents[1])
+    sys.path.insert(0, root)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p)
     import __spark_entry__ as em
     from random_cut_forest_by_aws_spark import get_spark
 

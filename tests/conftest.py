@@ -13,9 +13,7 @@ def spark():
 
 @pytest.fixture(scope="session")
 def seqs(spark):
-    """10k-row deterministic sequences table, cached for the test session."""
+    """10k-row deterministic sequences table, checkpointed for the test session."""
     from random_cut_forest_by_aws_spark.sources import sequences
 
-    df = sequences(spark, 10_000, seed=42).cache()
-    df.count()
-    return df
+    return sequences(spark, 10_000, seed=42).localCheckpoint(eager=True)

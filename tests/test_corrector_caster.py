@@ -120,8 +120,7 @@ def test_run_length_filter_in_drift_operator():
     pdf = pd.DataFrame({"source": "s", "bucket": 0, "seq": np.arange(4000),
                         **dict(zip(fcols, X.T))})
     kw = dict(num_trees=15, sample_size=64, chunk_size=512, buckets=1,
-              window=4000, use_corrector=True, transform="none",
-              normalize=False)
+              window=4000, use_corrector=True, transform="none")
 
     def in_spike_anoms(run_sup):
         fn = _make_drift_fn(["source", "bucket"], "seq", fcols,

@@ -44,9 +44,7 @@ def neardup_docs(spark):
         rows.append((base_id + 2 * p + 1, " ".join(mutated)))
     rows.append((2000, rows[0][1]))  # exact dups of doc 0 and doc 1
     rows.append((2001, rows[1][1]))
-    df = spark.createDataFrame(rows, "doc_id bigint, text string").cache()
-    df.count()
-    return df
+    return spark.createDataFrame(rows, "doc_id bigint, text string").localCheckpoint(eager=True)
 
 
 PLANTED = {(1000 + 2 * p, 1000 + 2 * p + 1) for p in range(10)}

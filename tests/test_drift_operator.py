@@ -36,7 +36,7 @@ def feat_df(spark):
     df = sequences(spark, 20_000, seed=42, violations=False, drift=True)
     return df.withColumn("features", token_features()).select(
         "source", "seq", "features"
-    ).cache()
+    ).localCheckpoint(eager=True)
 
 
 def test_normalizer_matches_sequential_deviation():
@@ -56,7 +56,7 @@ def test_normalizer_matches_sequential_deviation():
 
 def test_drift_verdicts_flag_planted_partition(feat_df):
     cfg = _cfg()
-    raw = drift_scores(feat_df, cfg=cfg).cache()
+    raw = drift_scores(feat_df, cfg=cfg).localCheckpoint(eager=True)
     verdicts = drift_verdicts(raw, cfg=cfg).toPandas().set_index("source")
     assert not verdicts.loc["code", "passed"]
     assert verdicts.loc["code", "n_drifted_windows"] >= 1
@@ -65,7 +65,6 @@ def test_drift_verdicts_flag_planted_partition(feat_df):
     # drifted windows sit in the drifted half of the stream (seq ≥ 10k)
     wins = raw.filter("row_kind = 'window'").toPandas()
     assert (wins[wins["source"] == "code"]["seq"] >= 10_000).all()
-    raw.unpersist()
 
 
 def test_drift_bucketing_splits_hot_source(feat_df):
@@ -221,6 +220,35 @@ def test_adaptive_bucketing_join_fallback_multi_group_cols(spark, seqs):
     assert cache_manager.cachedData().size() == n_cached
 
 
+def test_drift_null_group_is_bucketed_like_any_other(spark):
+    """A null group value is a group like any other: the literal-map
+    bucket count (one group column) and the broadcast join (two) give
+    the null group the same buckets, and a suite run gives it a
+    distribution_drift verdict."""
+    from random_cut_forest_by_aws_spark.plans.suite import SuiteConfig, ValidationSuite
+
+    df = sequences(spark, 4000, seed=1).withColumn(
+        "source", F.when(F.col("seq") % 3 == 0, F.lit(None)).otherwise(F.col("source"))
+    ).localCheckpoint(eager=True)
+    feat = df.select("source", F.lit("x").alias("g2"), "seq",
+                     token_features().alias("features"))
+    cfg = _cfg(buckets=None, rows_per_bucket=500, num_trees=10, sample_size=32)
+    summaries = [
+        sorted(
+            (str(r["source"]), r["bucket"], r["n_rows"])
+            for r in drift_scores(feat, "features", group_cols, "seq", cfg)
+            .filter("row_kind = 'summary'").collect()
+        )
+        for group_cols in (("source",), ("source", "g2"))
+    ]
+    assert summaries[0] == summaries[1]
+    # 1,334 null-group rows at 500 rows per bucket
+    assert [b for s, b, _ in summaries[0] if s == "None"] == [0, 1, 2]
+    res = ValidationSuite(spark, SuiteConfig(drift=cfg)).run(df)
+    scopes = [r["scope"] for r in res.verdicts.filter("check = 'distribution_drift'").collect()]
+    assert None in scopes
+
+
 def test_drift_verdicts_null_mean_score_when_group_scores_nothing(spark):
     """A group whose buckets all score no rows (each bucket shorter than
     the warm-up) gets a null mean_score instead of DIVIDE_BY_ZERO under
@@ -250,7 +278,7 @@ def test_drift_lineage_bucket_grain_consistent_with_verdicts(feat_df):
     )
 
     cfg = _cfg(buckets=None, rows_per_bucket=2000)
-    raw = drift_scores(feat_df, "features", ("source",), "seq", cfg).cache()
+    raw = drift_scores(feat_df, "features", ("source",), "seq", cfg).localCheckpoint(eager=True)
     lin = drift_lineage(raw, ("source",), cfg).toPandas()
     dv = drift_verdicts(raw, ("source",), cfg).toPandas().set_index("source")
 
@@ -271,8 +299,7 @@ def test_drift_lineage_bucket_grain_consistent_with_verdicts(feat_df):
     assert lin["config_digest"].nunique() == 1
     # and pinned: the digest hashes every DriftConfig field, so adding,
     # removing or renaming a hashed field changes it
-    assert lin["config_digest"].iloc[0] == "cf9fea6c863ef735"
-    raw.unpersist()
+    assert lin["config_digest"].iloc[0] == "ccf89a4926d1fe42"
 
 
 def _jobs_run_by(spark, build) -> list[int]:
@@ -347,7 +374,7 @@ def test_drift_scores_struct_field_order_matches_udf(spark):
     })
     pdf.loc[2000:2010, "a"] += 200.0
     cfg = _cfg(buckets=1, num_trees=10, sample_size=32, chunk_size=256,
-               transform="none", normalize=False)
+               transform="none")
     df = spark.createDataFrame(pdf).select(
         "source", "seq", F.struct("z", "a").alias("features")
     )

@@ -125,14 +125,16 @@ def test_sources_dim_is_a_local_relation(spark):
 
 
 PACKAGE = Path(__file__).resolve().parents[1] / "random_cut_forest_by_aws_spark"
+TESTS = Path(__file__).resolve().parent
 # (file, enclosing function) pairs allowed to call createDataFrame
 ALLOWED = {("session.py", "local_frame"), ("operators/schema.py", "_parse")}
 
 
-def _package_trees():
-    """(path relative to the package, parsed module) for every package file."""
-    for path in sorted(PACKAGE.rglob("*.py")):
-        yield path.relative_to(PACKAGE).as_posix(), ast.parse(path.read_text())
+def _package_trees(root: Path = PACKAGE):
+    """(path relative to ``root``, parsed module) for every file under
+    ``root`` (the package by default)."""
+    for path in sorted(root.rglob("*.py")):
+        yield path.relative_to(root).as_posix(), ast.parse(path.read_text())
 
 
 def test_no_create_dataframe_outside_local_frame():
@@ -205,12 +207,51 @@ def test_package_makes_no_cache_call():
     plan stays registered with the CacheManager, which re-canonicalizes
     it against every later query in the session. Intermediates computed
     once are truncated with ``localCheckpoint``; ``persist()`` only where
-    an ``unpersist()`` releases it."""
+    an ``unpersist()`` releases it. The tests share one session, so their
+    fixtures follow the same rule."""
     found = sorted(
-        (rel, node.lineno)
-        for rel, tree in _package_trees()
+        (root.name, rel, node.lineno)
+        for root in (PACKAGE, TESTS)
+        for rel, tree in _package_trees(root)
         for node in ast.walk(tree)
         if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
         and node.func.attr == "cache"
     )
     assert found == [], found
+
+
+# (file, function, parameter) that may go unread, each with its reason
+UNREAD_ALLOWED = {
+    # the stub keeps the real decoder's (payload, mime) signature
+    ("operators/multimodal.py", "_decode_stub", "mime"),
+    # keeps PredictorCorrector.java's signature
+    ("core/corrector.py", "should_suppress", "score"),
+}
+
+
+def test_package_has_no_dead_switch():
+    """A parameter or a ``*Config`` field that nothing reads selects
+    nothing, yet callers can set it: every parameter of a package
+    function is read in its body (method receivers aside), and every
+    field of a ``*Config`` dataclass is read as an attribute somewhere
+    in the package."""
+    unread, fields, read_attrs = set(), set(), set()
+    for rel, tree in _package_trees():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
+                read_attrs.add(node.attr)
+            elif isinstance(node, ast.ClassDef) and node.name.endswith("Config"):
+                fields.update((rel, node.name, stmt.target.id) for stmt in node.body
+                              if isinstance(stmt, ast.AnnAssign))
+            elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                params = {p.arg for p in (*a.posonlyargs, *a.args, *a.kwonlyargs,
+                                          a.vararg, a.kwarg) if p} - {"self", "cls"}
+                loads = {n.id for stmt in node.body for n in ast.walk(stmt)
+                         if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
+                unread.update((rel, node.name, p) for p in params - loads)
+    assert ("operators/drift.py", "DriftConfig", "transform") in fields
+    # an unread parameter, a stale exception or an unread field
+    dead = sorted(unread ^ UNREAD_ALLOWED) + sorted(
+        f for f in fields if f[2] not in read_attrs)
+    assert dead == [], dead

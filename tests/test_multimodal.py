@@ -18,9 +18,7 @@ from random_cut_forest_by_aws_spark.operators.multimodal import (
 
 @pytest.fixture(scope="module")
 def media(spark):
-    df = synth_media(spark, 300, seed=42).cache()
-    df.count()
-    return df
+    return synth_media(spark, 300, seed=42).localCheckpoint(eager=True)
 
 
 def test_metadata_violations(media):

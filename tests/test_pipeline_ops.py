@@ -55,12 +55,17 @@ def test_ngram_contamination_planted(spark):
     assert out[1].n_overlap >= 1
     assert out[1].n_ngrams == 10 - 7          # 10 words → 3 grams
     assert out[3].n_overlap >= 2
-    # exact-string mode must agree with the hashed scale path
+    # parity oracle: the exact-string gram join must agree with the
+    # hashed join the operator ships
+    from pyspark.sql import functions as F
+    from random_cut_forest_by_aws_spark.operators.textqc import _word_ngrams
+
+    gram = F.explode(_word_ngrams(F.split(F.col("text"), " "), 8)).alias("gram")
     exact = {
-        r.doc_id: r.n_overlap
-        for r in ngram_contamination(
-            corpus, evals, n=8, hash_ngrams=False
-        ).collect()
+        r.doc_id: r["count"]
+        for r in corpus.select("doc_id", gram)
+        .join(evals.select(gram).distinct(), "gram", "left_semi")
+        .groupBy("doc_id").count().collect()
     }
     assert exact == {k: v.n_overlap for k, v in out.items()}
 

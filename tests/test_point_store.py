@@ -54,10 +54,16 @@ def test_point_store_covers_all_live_leaves():
         assert sampler_leaves == live_leaves
 
 
+def _dense_state(f: RCFForest) -> dict:
+    """The legacy dense checkpoint: box arrays stored, no point store."""
+    state = {k: v for k, v in f.to_state().items() if not k.startswith("ps_")}
+    return {**state, "bbmin": f.bbmin.copy(), "bbmax": f.bbmax.copy()}
+
+
 def test_compact_state_roundtrip_bit_exact_vs_dense():
     f, X = _forest_with_history()
-    g_dense = RCFForest.from_state(f.to_state(compact=False))
-    g_compact = RCFForest.from_state(f.to_state(compact=True))
+    g_dense = RCFForest.from_state(_dense_state(f))
+    g_compact = RCFForest.from_state(f.to_state())
     # live-node boxes reconstruct bit-exactly (free slots are scratch)
     for t in range(f.T):
         live = np.nonzero(f.mass[t] > 0)[0]
@@ -104,8 +110,8 @@ def test_compact_state_is_much_smaller():
     dense 2·T·2K·d box arrays for the deduped point table must cut the
     compressed npz by at least 2× (typically far more)."""
     f, _ = _forest_with_history(d=8, trees=20, k=128, n=8000)
-    dense = _npz_bytes(f.to_state(compact=False))
-    compact = _npz_bytes(f.to_state(compact=True))
+    dense = _npz_bytes(_dense_state(f))
+    compact = _npz_bytes(f.to_state())
     assert compact * 2 < dense, (compact, dense)
 
 
@@ -126,7 +132,7 @@ def test_point_store_degenerate_all_identical():
 
 def test_legacy_dense_state_still_loads():
     f, X = _forest_with_history(n=500, trees=4, k=32)
-    legacy = f.to_state(compact=False)
+    legacy = _dense_state(f)
     assert "bbmin" in legacy and "ps_points" not in legacy
     g = RCFForest.from_state(legacy)
     np.testing.assert_array_equal(f.score(X[:10]), g.score(X[:10]))

@@ -15,9 +15,8 @@ from random_cut_forest_by_aws_spark.operators.rcf_batch import (
 
 @pytest.fixture(scope="module")
 def emb(spark):
-    df = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").cache()
-    df.count()
-    return df
+    df = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    return df.localCheckpoint(eager=True)
 
 
 def test_rcf_group_scores_flags_planted_outlier(spark, emb):

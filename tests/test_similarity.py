@@ -14,9 +14,8 @@ from random_cut_forest_by_aws_spark.operators.similarity import (
 
 @pytest.fixture(scope="module")
 def emb(spark):
-    df = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").cache()
-    df.count()
-    return df
+    df = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    return df.localCheckpoint(eager=True)
 
 
 @pytest.fixture(scope="module")
@@ -42,10 +41,10 @@ def test_exact_topk_self_hit(emb, qset):
 
 def test_ivf_recall(emb, qset):
     exact = cosine_topk(emb, qset, k=10).toPandas()
-    approx = ivf_cosine_topk(emb, qset, dim=64, k=10, n_lists=8, n_probe=4).toPandas()
+    approx = ivf_cosine_topk(emb, qset, k=10, n_lists=8, n_probe=4).toPandas()
     assert _recall(exact, approx) >= 0.6
     # full probe == exact
-    full = ivf_cosine_topk(emb, qset, dim=64, k=10, n_lists=8, n_probe=8).toPandas()
+    full = ivf_cosine_topk(emb, qset, k=10, n_lists=8, n_probe=8).toPandas()
     assert _recall(exact, full) == 1.0
 
 
@@ -72,9 +71,8 @@ def clustered(spark):
         for j in range(25):
             v = C[ci] + 0.02 * rng.standard_normal(64)
             pts.append((ci * 25 + j, (v / np.linalg.norm(v)).astype("float32").tolist(), ci))
-    df = spark.createDataFrame(pts, "vec_id bigint, embedding array<float>, label int").cache()
-    df.count()
-    return df
+    df = spark.createDataFrame(pts, "vec_id bigint, embedding array<float>, label int")
+    return df.localCheckpoint(eager=True)
 
 
 def test_lsh_multiprobe_recall(clustered):
@@ -161,8 +159,8 @@ def neardup_corpus(spark):
         b /= np.linalg.norm(b)
         vecs.extend([a, b])
     rows = [(i, v.astype("float32").tolist()) for i, v in enumerate(vecs)]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>").cache()
-    df.count()
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    df = df.localCheckpoint(eager=True)
     return df, np.stack([np.asarray(v, np.float64) for _, v in rows])
 
 
