@@ -95,7 +95,7 @@ typedef struct {
     float *cutval, *bbmin, *bbmax;
     int32_t root, freetop;
     int N, d;
-    u128 rng_state, rng_inc;
+    u128 pcg_state, pcg_inc;
     /* scratch, sized by caller */
     int32_t *stk_node, *stk_sib;
     double *bmin, *bmax, *smin, *smax, *los, *gaps;
@@ -196,7 +196,7 @@ static int t_insert(Tree *t, const double *x) {
         if (g > 0.0) { t->outf[i] = 1; outside++; } else t->outf[i] = 0;
     }
     for (;;) {
-        double factor = pcg_next_double(&t->rng_state, t->rng_inc);
+        double factor = pcg_next_double(&t->pcg_state, t->pcg_inc);
         double bp = factor * total;
         int dim = -1;
         double value = 0.0, acc = 0.0;
@@ -797,8 +797,8 @@ void rcf_update_batch(
         tr.freetop = freetop[tt];
         tr.N = N;
         tr.d = d;
-        tr.rng_state = (((u128)rs_hi[tt]) << 64) | rs_lo[tt];
-        tr.rng_inc = (((u128)ri_hi[tt]) << 64) | ri_lo[tt];
+        tr.pcg_state = (((u128)rs_hi[tt]) << 64) | rs_lo[tt];
+        tr.pcg_inc = (((u128)ri_hi[tt]) << 64) | ri_lo[tt];
         tr.stk_node = stk_node;
         tr.stk_sib = stk_sib;
         tr.bmin = scr;
@@ -863,8 +863,8 @@ void rcf_update_batch(
 
         root[tt] = tr.root;
         freetop[tt] = tr.freetop;
-        rs_hi[tt] = (uint64_t)(tr.rng_state >> 64);
-        rs_lo[tt] = (uint64_t)tr.rng_state;
+        rs_hi[tt] = (uint64_t)(tr.pcg_state >> 64);
+        rs_lo[tt] = (uint64_t)tr.pcg_state;
     }
     free(stk_node);
     free(stk_sib);

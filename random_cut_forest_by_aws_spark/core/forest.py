@@ -1352,6 +1352,11 @@ class RCFForest:
     # and internal boxes are exact child unions (maintained as such by
     # insert/delete, property-tested in tests/test_forest_properties.py)
     _COMPACT_DROP = ("bbmin", "bbmax")
+    # each tree's PCG64 (state, inc) as 64-bit words: (member, field, shift)
+    _RNG_WORDS = (
+        ("rng_lo", "state", 0), ("rng_hi", "state", 64), ("rng_hi2", "state", 128),
+        ("inc_lo", "inc", 0), ("inc_hi", "inc", 64),
+    )
 
     def to_state(self) -> dict:
         """Checkpoint dict (NumPy arrays only, npz-safe).
@@ -1362,7 +1367,9 @@ class RCFForest:
         sampler slot and the reference counts
         (store/PointStore.java:69,197-255). Internal-node boxes are
         rebuilt bit-exactly on load as bottom-up child unions;
-        ``from_state`` still loads the legacy dense format.
+        ``from_state`` still loads the legacy dense format. Each tree's
+        PCG64 state is stored as uint64 words (``_RNG_WORDS``), so the
+        dict loads back with ``np.load(..., allow_pickle=False)``.
         """
         fields = [f for f in self._ARRAY_FIELDS if f not in self._COMPACT_DROP]
         state = {f: getattr(self, f).copy() for f in fields}
@@ -1379,11 +1386,6 @@ class RCFForest:
             for name in ("parent", "left", "right", "cutdim", "mass",
                          "freelist", "sleaf", "root", "freetop", "ssize"):
                 state[name] = state[name].astype(np.int16)
-        rng_states = []
-        for g in self._rngs:
-            s = g.bit_generator.state["state"]
-            rng_states.append((s["state"], s["inc"]))
-        state["rng_state"] = np.array(rng_states, dtype=object)
         state["meta"] = np.array(
             [self.d, self.T, self.K, self.entries, self.seed, self.output_after],
             dtype=np.int64,
@@ -1400,6 +1402,10 @@ class RCFForest:
             ],
             dtype=np.float64,
         )
+        rs = [g.bit_generator.state["state"] for g in self._rngs]
+        mask = (1 << 64) - 1
+        for name, field, shift in self._RNG_WORDS:
+            state[name] = np.array([(r[field] >> shift) & mask for r in rs], np.uint64)
         return state
 
     @classmethod
@@ -1431,10 +1437,11 @@ class RCFForest:
                 np.asarray(state["ps_points"], np.float32),
                 np.asarray(state["ps_slot_idx"], np.int64),
             )
-        for g, (s, inc) in zip(f._rngs, state["rng_state"]):
+        for t, g in enumerate(f._rngs):
             st = g.bit_generator.state
-            st["state"]["state"] = int(s)
-            st["state"]["inc"] = int(inc)
+            st["state"] = {"state": 0, "inc": 0}
+            for name, field, shift in cls._RNG_WORDS:
+                st["state"][field] |= int(state[name][t]) << shift
             g.bit_generator.state = st
         return f
 

@@ -35,10 +35,14 @@ keyed by that pair (``_checkpoint_path``); a re-run skips
 already-processed rows (seq ≤ saved watermark) and continues the sketch —
 bit-identical to an uninterrupted run (tested), mirroring the reference's
 state-mapper round-trips (``state/RandomCutForestMapper.java:118,209``).
-Resume is bit-exact only while the bucket layout holds: pin ``buckets``
-for resumable runs. Adaptive bucket counts re-key the rows when appended
-rows push a group across a multiple of ``rows_per_bucket``, and the
-re-keyed buckets no longer match their saved state.
+The checkpoint layout is written down once: ``_COUNTERS`` for the
+scalar counters, ``_state_dict`` / ``_load_group_state`` for the npz
+members and ``_new_sketch`` for a fresh sketch; streaming drift stores
+the same layout in its GroupState. Resume is bit-exact only while the
+bucket layout holds: pin ``buckets`` for resumable runs. Adaptive bucket
+counts re-key the rows when appended rows push a group across a multiple
+of ``rows_per_bucket``, and the re-keyed buckets no longer match their
+saved state.
 """
 
 from __future__ import annotations
@@ -138,7 +142,8 @@ class DriftConfig:
     auto_adjust: bool = False
     # skew handling: a group never exceeds ~rows_per_bucket rows; bucket
     # count per group value adapts to its frequency, capped at max_buckets.
-    # buckets=N forces exactly N buckets for every group (tests/back-compat).
+    # buckets=N forces exactly N buckets for every group: the only
+    # resume-safe setting, since appended rows never re-key the buckets.
     buckets: int | None = None
     rows_per_bucket: int = 25_000
     max_buckets: int = 4096
@@ -413,6 +418,63 @@ def _checkpoint_path(ckpt_dir: str, key: tuple) -> str:
     return os.path.join(ckpt_dir, f"group-{tag}.npz")
 
 
+# The sketch's scalar counters as the checkpoint stores them: one npz
+# member per entry, holding its fields in order with that dtype. A fresh
+# sketch starts from the defaults; a shorter stored array (a checkpoint
+# written before a field existed) keeps the later fields' defaults.
+# ``last_seq`` stays field 0 of ``extras``: the drift fn patches it there.
+_COUNTERS = (
+    ("extras", np.int64, (
+        ("last_seq", -1), ("n_rows", 0), ("n_scored", 0), ("n_anomalous", 0),
+        ("n_windows", 0), ("n_drifted_windows", 0), ("n_imputed", 0), ("run_seq", -1),
+    )),
+    ("extras_f", np.float64, (
+        ("score_sum", 0.0), ("win_sum", 0.0), ("win_cnt", 0.0), ("imp_ema", 0.0),
+    )),
+    ("extras_sh", np.float64, (
+        ("sh_last_seq", -(1 << 62)), ("sh_last_score", 0.0), ("rc_last_seq", -(1 << 62)),
+    )),
+)
+
+
+def _fresh_extras(d: int, baseline_discount: float) -> dict:
+    """A fresh sketch's counters and carried rows over ``d`` input dims."""
+    extras = {name: default for _, _, fields in _COUNTERS for name, default in fields}
+    extras.update(
+        run_attrib=None, baseline=Deviation(baseline_discount),
+        tlast=np.full(d, np.nan), sh_tail=np.zeros((0, d), np.float32),
+    )
+    return extras
+
+
+def _new_sketch(cfg: DriftConfig, key: tuple, d: int, tf: dict):
+    """A fresh (forest, thresholder, normalizer, extras) for one ``(group,
+    bucket)`` key over ``d`` input dims: the batch and streaming operators'
+    starting state, and the shape ``_load_group_state`` reads back."""
+    forest = RCFForest(
+        d * max(1, cfg.shingle_size),
+        num_trees=cfg.num_trees,
+        sample_size=cfg.sample_size,
+        time_decay=cfg.time_decay,
+        seed=_group_seed(tuple(key), cfg.seed),
+    )
+    th = BasicThresholder(z_factor=cfg.z_factor)
+    norm = _Normalizer(
+        d, cfg.norm_discount if tf["do_stat"] else 0.0, cfg.clip_factor, mean_only=tf["do_sub"]
+    )
+    return forest, th, norm, _fresh_extras(d, cfg.baseline_discount)
+
+
+def _put_thresholder(state: dict, prefix: str, th: BasicThresholder) -> None:
+    state.update({prefix + k: np.array(v) for k, v in th.to_state().items()})
+
+
+def _get_thresholder(state: dict, prefix: str) -> BasicThresholder:
+    return BasicThresholder.from_state(
+        {k[len(prefix):]: v for k, v in state.items() if k.startswith(prefix)}
+    )
+
+
 def _state_dict(
     forest: RCFForest,
     th: BasicThresholder,
@@ -430,56 +492,20 @@ def _state_dict(
     on forest state at chunk boundaries, so the checkpoint always stores
     boundary state and re-delivers the (< chunk_size) tail on resume."""
     state = forest.to_state()
-    state.pop("rng_state")
-    rs = [(g.bit_generator.state["state"]["state"], g.bit_generator.state["state"]["inc"])
-          for g in forest._rngs]
-    state["rng_lo"] = np.array([s & ((1 << 64) - 1) for s, _ in rs], np.uint64)
-    state["rng_hi"] = np.array([(s >> 64) & ((1 << 64) - 1) for s, _ in rs], np.uint64)
-    state["rng_hi2"] = np.array([(s >> 128) & ((1 << 64) - 1) for s, _ in rs], np.uint64)
-    state["inc_lo"] = np.array([i & ((1 << 64) - 1) for _, i in rs], np.uint64)
-    state["inc_hi"] = np.array([(i >> 64) & ((1 << 64) - 1) for _, i in rs], np.uint64)
-    th_state = th.to_state()
-    state["th_primary"] = np.array(th_state["primary"])
-    state["th_secondary"] = np.array(th_state["secondary"])
-    state["th_threshold_dev"] = np.array(th_state["threshold_dev"])
-    state["th_params"] = np.array(th_state["params"])
+    _put_thresholder(state, "th_", th)
     if th2 is not None:  # secondary (distance-mode) thresholder
-        t2 = th2.to_state()
-        state["th2_primary"] = np.array(t2["primary"])
-        state["th2_secondary"] = np.array(t2["secondary"])
-        state["th2_threshold_dev"] = np.array(t2["threshold_dev"])
-        state["th2_params"] = np.array(t2["params"])
+        _put_thresholder(state, "th2_", th2)
     state.update(norm.to_state())
-    if corrector is not None and getattr(corrector, "auto_adjust", False):
+    if corrector is not None and corrector.auto_adjust:
         state.update(corrector.aa_state())
-    state["extras"] = np.array(
-        [extras.get("last_seq", -1), extras.get("n_rows", 0), extras.get("n_scored", 0),
-         extras.get("n_anomalous", 0), extras.get("n_windows", 0),
-         extras.get("n_drifted_windows", 0), extras.get("n_imputed", 0),
-         extras.get("run_seq", -1)],
-        np.int64,
-    )
-    rv = extras.get("run_attrib")
-    state["run_attrib"] = (
-        np.asarray(rv, np.float64) if rv is not None else np.zeros(0)
-    )
-    state["extras_f"] = np.array(
-        [extras.get("score_sum", 0.0), extras.get("win_sum", 0.0),
-         extras.get("win_cnt", 0.0), extras.get("imp_ema", 0.0)]
-    )
+    for member, dtype, fields in _COUNTERS:
+        state[member] = np.array([extras[name] for name, _ in fields], dtype)
+    rv = extras["run_attrib"]
+    state["run_attrib"] = np.asarray(rv, np.float64) if rv is not None else np.zeros(0)
     state["baseline"] = np.array(extras["baseline"].to_state())
-    state["tlast"] = np.asarray(
-        extras.get("tlast", np.full(forest.d, np.nan)), np.float64
-    )
-    st = extras.get("sh_tail")
-    state["sh_tail"] = (
-        np.asarray(st, np.float64) if st is not None and len(st) else np.zeros((0, 1))
-    )
-    state["extras_sh"] = np.array(
-        [float(extras.get("sh_last_seq", -(1 << 62))),
-         float(extras.get("sh_last_score", 0.0)),
-         float(extras.get("rc_last_seq", -(1 << 62)))]
-    )
+    state["tlast"] = np.asarray(extras["tlast"], np.float64)
+    st = extras["sh_tail"]
+    state["sh_tail"] = np.asarray(st, np.float64) if len(st) else np.zeros((0, 1))
     n_buf = len(buf_seqs)
     state["buf_X"] = (
         np.asarray(buf_X, np.float64).reshape(n_buf, -1)
@@ -503,66 +529,30 @@ def _write_group_state(path: str, state: dict) -> None:
     os.replace(tmp, path)  # atomic: readers never see partial state
 
 
-def _load_group_state(path_or_file):
+def _load_group_state(path_or_file, mean_only: bool = False):
+    """Read what ``_state_dict`` wrote: ``_new_sketch``'s (forest,
+    thresholder, normalizer, extras), then the stored arrays themselves
+    (replay buffer, autoAdjust state). ``mean_only`` is the normalizer's
+    SUBTRACT_MA switch, which the state does not record."""
     z = np.load(path_or_file, allow_pickle=False)
     state = {k: z[k] for k in z.files}
-    n = len(state["rng_lo"])
-    rng_state = []
-    for i in range(n):
-        s = (int(state["rng_hi2"][i]) << 128) | (int(state["rng_hi"][i]) << 64) | int(
-            state["rng_lo"][i]
-        )
-        inc = (int(state["inc_hi"][i]) << 64) | int(state["inc_lo"][i])
-        rng_state.append((s, inc))
-    state["rng_state"] = np.array(rng_state, dtype=object)
-    forest = RCFForest.from_state(state)
-    th = BasicThresholder.from_state(
-        {
-            "primary": state["th_primary"],
-            "secondary": state["th_secondary"],
-            "threshold_dev": state["th_threshold_dev"],
-            "params": state["th_params"],
-        }
-    )
-    extras = {
-        "last_seq": int(state["extras"][0]),
-        "n_rows": int(state["extras"][1]),
-        "n_scored": int(state["extras"][2]),
-        "n_anomalous": int(state["extras"][3]),
-        "n_windows": int(state["extras"][4]),
-        "n_drifted_windows": int(state["extras"][5]),
-        "n_imputed": int(state["extras"][6]) if len(state["extras"]) > 6 else 0,
-        "run_seq": int(state["extras"][7]) if len(state["extras"]) > 7 else -1,
-        "run_attrib": (
-            np.asarray(state["run_attrib"], np.float64)
-            if "run_attrib" in state and len(state["run_attrib"])
-            else None
-        ),
-        "score_sum": float(state["extras_f"][0]),
-        "win_sum": float(state["extras_f"][1]),
-        "win_cnt": float(state["extras_f"][2]),
-        "imp_ema": float(state["extras_f"][3]) if len(state["extras_f"]) > 3 else 0.0,
-        "baseline": Deviation.from_state(state["baseline"]),
-    }
+    d = len(state["nsum"])
+    norm = _Normalizer(d, 0.0, 0.0, mean_only=mean_only)
+    norm.load_state(state)
+    extras = _fresh_extras(d, 0.0)
+    for member, _, fields in _COUNTERS:
+        for (name, default), v in zip(fields, state.get(member, ())):
+            extras[name] = type(default)(v)
+    extras["baseline"] = Deviation.from_state(state["baseline"])
+    if len(state.get("run_attrib", ())):
+        extras["run_attrib"] = np.asarray(state["run_attrib"], np.float64)
     if "tlast" in state:
         extras["tlast"] = np.asarray(state["tlast"], np.float64)
     if "sh_tail" in state and state["sh_tail"].shape != (0, 1):
         extras["sh_tail"] = np.asarray(state["sh_tail"], np.float32)
-    if "extras_sh" in state:
-        extras["sh_last_seq"] = int(state["extras_sh"][0])
-        extras["sh_last_score"] = float(state["extras_sh"][1])
-        if len(state["extras_sh"]) > 2:
-            extras["rc_last_seq"] = int(state["extras_sh"][2])
     if "th2_params" in state:
-        extras["th2"] = BasicThresholder.from_state(
-            {
-                "primary": state["th2_primary"],
-                "secondary": state["th2_secondary"],
-                "threshold_dev": state["th2_threshold_dev"],
-                "params": state["th2_params"],
-            }
-        )
-    return forest, th, state, extras
+        extras["th2"] = _get_thresholder(state, "th2_")
+    return RCFForest.from_state(state), _get_thresholder(state, "th_"), norm, extras, state
 
 
 def _make_drift_fn(group_cols: list[str], order_col: str, feature_cols: list[str], cfg: DriftConfig):
@@ -610,57 +600,34 @@ def _make_drift_fn(group_cols: list[str], order_col: str, feature_cols: list[str
         imputed = np.zeros(len(X), bool)
 
         tf = _resolve_transform(cfg, d)
-        do_norm, do_stat, do_sub = tf["do_norm"], tf["do_stat"], tf["do_sub"]
+        do_norm, do_stat = tf["do_norm"], tf["do_stat"]
 
         ckpt = (
             _checkpoint_path(cfg.checkpoint_dir, tuple(key)) if cfg.checkpoint_dir else None
-        )
-        extras = {
-            "last_seq": -1, "n_rows": 0, "n_scored": 0, "n_anomalous": 0,
-            "n_windows": 0, "n_drifted_windows": 0, "n_imputed": 0,
-            "run_seq": -1, "run_attrib": None,
-            "score_sum": 0.0, "win_sum": 0.0, "win_cnt": 0.0, "imp_ema": 0.0,
-            "baseline": Deviation(cfg.baseline_discount),
-        }
-        norm = _Normalizer(
-            d, cfg.norm_discount if do_stat else 0.0, cfg.clip_factor, mean_only=do_sub
         )
         emit_wm = -1  # emit only rows with seq > emit_wm
         n_buf = 0
         ckpt_raw = None
         if ckpt and os.path.exists(ckpt):
-            forest, th, raw, extras = _load_group_state(ckpt)
-            ckpt_raw = raw
-            norm.load_state(raw)
+            forest, th, norm, extras, ckpt_raw = _load_group_state(ckpt, tf["do_sub"])
             emit_wm = extras["last_seq"]
             keep = seqs > emit_wm  # resume: drop rows already processed…
             X, seqs = X[keep], seqs[keep]
             imputed = np.zeros(len(X), bool)
-            if len(raw["buf_seqs"]):  # …but replay the post-boundary tail
-                n_buf = len(raw["buf_seqs"])
-                X = np.vstack([raw["buf_X"], X]) if len(X) else raw["buf_X"]
-                seqs = np.concatenate([raw["buf_seqs"], seqs])
+            if len(ckpt_raw["buf_seqs"]):  # …but replay the post-boundary tail
+                n_buf = len(ckpt_raw["buf_seqs"])
+                X = np.vstack([ckpt_raw["buf_X"], X]) if len(X) else ckpt_raw["buf_X"]
+                seqs = np.concatenate([ckpt_raw["buf_seqs"], seqs])
                 buf_imp = (
-                    raw["buf_imp"].astype(bool)
-                    if "buf_imp" in raw
+                    ckpt_raw["buf_imp"].astype(bool)
+                    if "buf_imp" in ckpt_raw
                     else np.zeros(n_buf, bool)
                 )
                 imputed = np.concatenate([buf_imp, np.zeros(len(X) - n_buf, bool)])
         else:
-            forest = RCFForest(
-                d * max(1, cfg.shingle_size),
-                num_trees=cfg.num_trees,
-                sample_size=cfg.sample_size,
-                time_decay=cfg.time_decay,
-                seed=_group_seed(tuple(key), cfg.seed),
-            )
-            th = BasicThresholder(z_factor=cfg.z_factor)
+            forest, th, norm, extras = _new_sketch(cfg, key, d, tf)
 
-        if "tlast" not in extras:
-            extras["tlast"] = np.full(d, np.nan)
         s_sh = max(1, cfg.shingle_size)
-        if "sh_tail" not in extras:
-            extras["sh_tail"] = np.zeros((0, d), np.float32)
         th2 = extras.pop("th2", None)
         if cfg.scoring in ("multi_mode", "multi_mode_recall") and th2 is None:
             th2 = BasicThresholder(z_factor=cfg.z_factor)
@@ -826,7 +793,7 @@ def _make_drift_fn(group_cols: list[str], order_col: str, feature_cols: list[str
                             # re-elevated (lastSignificantDescriptor). The
                             # scan touches only candidate rows (anomaly-
                             # bounded, not row-bounded).
-                            last_sig = int(extras.get("rc_last_seq", -(1 << 62)))
+                            last_sig = extras["rc_last_seq"]
                             seq_real = seq_p[real_pos]
                             ds_real = ds[real_pos]
                             for i in np.flatnonzero(
@@ -868,10 +835,8 @@ def _make_drift_fn(group_cols: list[str], order_col: str, feature_cols: list[str
                         idx = np.fromiter((f[0] for f in flagged), np.int64)
                         thr = np.fromiter((f[2] for f in flagged), np.float64)
                         shstate = {
-                            "last_anomaly_seq": extras.get(
-                                "sh_last_seq", -(1 << 62)
-                            ),
-                            "last_anomaly_score": extras.get("sh_last_score", 0.0),
+                            "last_anomaly_seq": extras["sh_last_seq"],
+                            "last_anomaly_score": extras["sh_last_score"],
                         }
                         sup, _, _ = corrector.suppress_shingle_batch(
                             forest, pts[idx].astype(np.float64), thr,
@@ -1145,7 +1110,11 @@ def drift_scores(
                 # a map key cannot be null: the null group's count is the
                 # lookup's default instead
                 null_nb = nbs.pop(None, 1)
-                kv = [F.lit(x) for kv_pair in nbs.items() for x in kv_pair]
+                # keys cast to the column's type: the literal of a decimal
+                # key carries that value's own precision, and the map's
+                # keys must share one type
+                key_type = df.schema[gcols[0]].dataType
+                kv = [c for k, nb in nbs.items() for c in (F.lit(k).cast(key_type), F.lit(nb))]
                 # try_element_at: ANSI-safe on a null key (the driver
                 # gate runs with spark.sql.ansi.enabled=true)
                 nb_col = F.coalesce(

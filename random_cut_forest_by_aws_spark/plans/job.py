@@ -39,7 +39,11 @@ def main(argv=None) -> int:
         "(north-rule Iceberg surface; this sandbox ships only parquet)",
     )
     ap.add_argument("--ref-dim", default=None, help="sources dimension table path")
-    ap.add_argument("--checkpoint-dir", default=None, help="resume checkpoints")
+    ap.add_argument(
+        "--checkpoint-dir", default=None,
+        help="resume checkpoints; a resume is bit-exact only while appended rows change "
+        "no group's adaptive drift bucket count",
+    )
     ap.add_argument("--cpus", type=int, default=None, help="local[N] override")
     ap.add_argument("--trees", type=int, default=30)
     ap.add_argument("--sample-size", type=int, default=256)

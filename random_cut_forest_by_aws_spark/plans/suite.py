@@ -160,6 +160,11 @@ class ValidationSuite:
             return [F.lit(check).alias("check"), scope.alias("scope"), key.alias("key"),
                     detail.alias("detail")]
 
+        def verdict(check, scope, passed, count, detail) -> list:
+            # check: a name or a column; count: cast to long
+            return [F.lit(check).alias("check"), scope.alias("scope"), passed.alias("passed"),
+                    F.lit(count).cast("long").alias("violation_count"), detail.alias("detail")]
+
         group = F.col(cfg.group_col).cast("string")
         table = F.lit("<table>")
 
@@ -268,40 +273,23 @@ class ValidationSuite:
         verdict_dfs: list[DataFrame] = []
         violation_dfs: list[DataFrame] = []
 
-        verdict_dfs.append(
-            stats.select(
-                F.lit("n_tok_positive").alias("check"),
-                F.col(cfg.group_col).cast("string").alias("scope"),
-                (F.col(f"{cfg.n_tok_col}_min") > 0).alias("passed"),
-                F.lit(0).cast("long").alias("violation_count"),
-                F.concat_ws(
-                    "=", F.lit("n_tok_min"), F.col(f"{cfg.n_tok_col}_min").cast("string")
-                ).alias("detail"),
-            )
-        )
+        verdict_dfs.append(stats.select(*verdict(
+            "n_tok_positive", group, F.col(f"{cfg.n_tok_col}_min") > 0, 0,
+            F.concat_ws("=", F.lit("n_tok_min"), F.col(f"{cfg.n_tok_col}_min").cast("string")),
+        )))
         # key-column not-null: based on the key columns' own null counts
         # (n_tok_nulls tests a different column and was a false negative)
         key_nulls = sum(
             (F.col(f"{k}_nulls") for k in cfg.key_cols), F.lit(0)
         ).cast("long")
-        verdict_dfs.append(
-            stats.select(
-                F.lit("doc_id_not_null").alias("check"),
-                F.col(cfg.group_col).cast("string").alias("scope"),
-                (key_nulls == 0).alias("passed"),
-                key_nulls.alias("violation_count"),
-                F.lit(f"null count over keys {list(cfg.key_cols)}").alias("detail"),
-            )
-        )
-        verdict_dfs.append(
-            stats.select(
-                F.lit("n_tok_not_null").alias("check"),
-                F.col(cfg.group_col).cast("string").alias("scope"),
-                (F.col(f"{cfg.n_tok_col}_nulls") == 0).alias("passed"),
-                F.col(f"{cfg.n_tok_col}_nulls").cast("long").alias("violation_count"),
-                F.lit("n_tok null count").alias("detail"),
-            )
-        )
+        verdict_dfs.append(stats.select(*verdict(
+            "doc_id_not_null", group, key_nulls == 0, key_nulls,
+            F.lit(f"null count over keys {list(cfg.key_cols)}"),
+        )))
+        n_tok_nulls = F.col(f"{cfg.n_tok_col}_nulls")
+        verdict_dfs.append(stats.select(*verdict(
+            "n_tok_not_null", group, n_tok_nulls == 0, n_tok_nulls, F.lit("n_tok null count"),
+        )))
 
         # the table-level counts are already on the driver: one local
         # relation for all of them (no Python-worker tasks on read)
@@ -322,21 +310,17 @@ class ValidationSuite:
             violation_dfs.append(refv)
         violation_dfs.append(inv)
 
-        verdict_dfs.append(
-            dv.select(
-                F.lit("distribution_drift").alias("check"),
-                F.col(cfg.group_col).cast("string").alias("scope"),
-                F.coalesce(F.col("passed"), F.lit(True)).alias("passed"),
-                F.col("n_drifted_windows").cast("long").alias("violation_count"),
-                F.concat_ws(
-                    " ",
-                    F.lit("windows"),
-                    F.col("n_windows").cast("string"),
-                    F.lit("mean_score"),
-                    F.round("mean_score", 4).cast("string"),
-                ).alias("detail"),
-            )
-        )
+        verdict_dfs.append(dv.select(*verdict(
+            "distribution_drift", group, F.coalesce(F.col("passed"), F.lit(True)),
+            F.col("n_drifted_windows"),
+            F.concat_ws(
+                " ",
+                F.lit("windows"),
+                F.col("n_windows").cast("string"),
+                F.lit("mean_score"),
+                F.round("mean_score", 4).cast("string"),
+            ),
+        )))
         violation_dfs.append(anomalies)
 
         # ---- structural schema contract (metadata-only, zero scan) -------
@@ -348,61 +332,45 @@ class ValidationSuite:
                 non_nullable=cfg.schema_non_nullable,
                 allow_extra=cfg.schema_allow_extra,
             )
-            verdict_dfs.append(
-                sv.select(
-                    F.lit("schema").alias("check"),
-                    F.col("column").alias("scope"),
-                    F.col("passed"),
-                    F.lit(0).cast("long").alias("violation_count"),
-                    F.concat_ws(
-                        " ",
-                        F.col("status"),
-                        F.lit("expected"),
-                        F.coalesce(F.col("expected_type"), F.lit("-")),
-                        F.lit("actual"),
-                        F.coalesce(F.col("actual_type"), F.lit("-")),
-                    ).alias("detail"),
-                )
-            )
+            verdict_dfs.append(sv.select(*verdict(
+                "schema", F.col("column"), F.col("passed"), 0,
+                F.concat_ws(
+                    " ",
+                    F.col("status"),
+                    F.lit("expected"),
+                    F.coalesce(F.col("expected_type"), F.lit("-")),
+                    F.lit("actual"),
+                    F.coalesce(F.col("actual_type"), F.lit("-")),
+                ),
+            )))
 
         # ---- baseline-profile drift (vs a previous run's histogram) ------
         if baseline_drift is not None:
-            verdict_dfs.append(
-                baseline_drift.select(
-                    F.lit("baseline_drift").alias("check"),
-                    F.col("column").alias("scope"),
-                    (F.col("psi") <= F.lit(cfg.psi_threshold)).alias("passed"),
-                    F.lit(0).cast("long").alias("violation_count"),
-                    F.concat_ws(
-                        " ",
-                        F.lit("psi"), F.col("psi").cast("string"),
-                        F.lit("js"), F.col("js_div").cast("string"),
-                        F.lit("ks"), F.col("ks").cast("string"),
-                        F.lit("n_base"), F.col("n_base").cast("string"),
-                        F.lit("n_curr"), F.col("n_curr").cast("string"),
-                    ).alias("detail"),
-                )
-            )
+            verdict_dfs.append(baseline_drift.select(*verdict(
+                "baseline_drift", F.col("column"), F.col("psi") <= F.lit(cfg.psi_threshold), 0,
+                F.concat_ws(
+                    " ",
+                    F.lit("psi"), F.col("psi").cast("string"),
+                    F.lit("js"), F.col("js_div").cast("string"),
+                    F.lit("ks"), F.col("ks").cast("string"),
+                    F.lit("n_base"), F.col("n_base").cast("string"),
+                    F.lit("n_curr"), F.col("n_curr").cast("string"),
+                ),
+            )))
 
         # ---- declarative per-table rules (operators/checks.Check) --------
         for cdf in custom:
-            verdict_dfs.append(
-                cdf.select(
-                    F.concat(F.lit("check:"), F.col("check")).alias("check"),
-                    F.col("constraint").alias("scope"),
-                    F.col("passed"),
-                    F.greatest(F.col("n_violations"), F.lit(0))
-                    .cast("long")
-                    .alias("violation_count"),
-                    F.concat_ws(
-                        " ",
-                        F.lit("metric"),
-                        F.col("metric").cast("string"),
-                        F.col("op"),
-                        F.col("threshold").cast("string"),
-                    ).alias("detail"),
-                )
-            )
+            verdict_dfs.append(cdf.select(*verdict(
+                F.concat(F.lit("check:"), F.col("check")), F.col("constraint"), F.col("passed"),
+                F.greatest(F.col("n_violations"), F.lit(0)),
+                F.concat_ws(
+                    " ",
+                    F.lit("metric"),
+                    F.col("metric").cast("string"),
+                    F.col("op"),
+                    F.col("threshold").cast("string"),
+                ),
+            )))
 
         verdicts = verdict_dfs[0]
         for v in verdict_dfs[1:]:

@@ -33,13 +33,13 @@ from pyspark.sql.types import (
 )
 
 from ..core.forest import RCFForest
-from ..core.thresholder import BasicThresholder, Deviation
+from ..core.thresholder import BasicThresholder
 from ..operators.drift import (
     DriftConfig,
     _feature_columns,
     _feature_matrix,
-    _group_seed,
     _load_group_state,
+    _new_sketch,
     _Normalizer,
     _resolve_transform,
     _shingle_points,
@@ -48,34 +48,13 @@ from ..operators.drift import (
 )
 
 
-def _pack(
-    forest: RCFForest,
-    th: BasicThresholder,
-    norm: _Normalizer,
-    tlast: np.ndarray,
-    sh_tail: np.ndarray | None = None,
-) -> bytes:
-    extras = {"baseline": Deviation(0.01), "tlast": tlast}
-    if sh_tail is not None:
-        extras["sh_tail"] = sh_tail
-    state = _state_dict(
-        forest, th, norm,
-        extras,
-        np.zeros((0, forest.d)), np.zeros(0, np.int64),
-    )
+def _pack(forest: RCFForest, th: BasicThresholder, norm: _Normalizer, extras: dict) -> bytes:
+    """The sketch as one GroupState blob: the batch checkpoint layout with
+    an empty replay buffer."""
+    state = _state_dict(forest, th, norm, extras, np.zeros((0, forest.d)), np.zeros(0, np.int64))
     buf = io.BytesIO()
     np.savez_compressed(buf, **state)
     return buf.getvalue()
-
-
-def _unpack(blob: bytes, mean_only: bool = False, base_dim: int | None = None):
-    forest, th, raw, extras = _load_group_state(io.BytesIO(blob))
-    d = base_dim or forest.d
-    norm = _Normalizer(d, 0.0, 100.0, mean_only=mean_only)
-    norm.load_state(raw)
-    tlast = extras.get("tlast", np.full(d, np.nan))
-    sh_tail = extras.get("sh_tail", np.zeros((0, d), np.float32))
-    return forest, th, norm, tlast, sh_tail
 
 
 def streaming_drift_scores(
@@ -91,6 +70,8 @@ def streaming_drift_scores(
     and ``feature_col``: a struct of numeric fields, one per dimension in
     field order (``F.struct(...)``; see functions.token_features). Any
     other feature type raises ``TypeError`` before the query starts.
+    Each group value is hashed into ``cfg.buckets or 8`` buckets by
+    ``order_col``, each carrying its own sketch.
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -128,49 +109,31 @@ def streaming_drift_scores(
     s_sh = max(1, cfg.shingle_size)
 
     def fn(key, pdf_iter, state):
-        tf = None
-        if state.exists:
-            forest, th, norm, tlast, sh_tail = _unpack(
-                bytes(state.get[0]),
-                mean_only=(cfg.transform == "subtract_ma"),
-                base_dim=None,
-            )
-            tf = _resolve_transform(cfg, forest.d // s_sh)
-        else:
-            forest = None
-            th = norm = tlast = sh_tail = None
+        sketch = None
         blocks: list[np.ndarray] = []
         for pdf in pdf_iter:
             pdf = pdf.sort_values(order_col, kind="mergesort")
             X = _feature_matrix(pdf, feat_names)
             seqs = pdf[order_col].to_numpy(np.int64)
-            if forest is None:
+            if sketch is None:
                 tf = _resolve_transform(cfg, X.shape[1])
-                forest = RCFForest(
-                    X.shape[1] * s_sh,
-                    num_trees=cfg.num_trees,
-                    sample_size=cfg.sample_size,
-                    time_decay=cfg.time_decay,
-                    seed=_group_seed(tuple(key), cfg.seed),
+                sketch = (
+                    _load_group_state(io.BytesIO(bytes(state.get[0])), tf["do_sub"])[:4]
+                    if state.exists
+                    else _new_sketch(cfg, key, X.shape[1], tf)
                 )
-                th = BasicThresholder(z_factor=cfg.z_factor)
-                norm = _Normalizer(
-                    X.shape[1], cfg.norm_discount if tf["do_stat"] else 0.0,
-                    cfg.clip_factor, mean_only=tf["do_sub"],
-                )
-                tlast = np.full(X.shape[1], np.nan)
-                sh_tail = np.zeros((0, X.shape[1]), np.float32)
+                forest, th, norm, extras = sketch
             for lo in range(0, len(X), cfg.chunk_size):
                 chunk = X[lo : lo + cfg.chunk_size]
                 sq = seqs[lo : lo + cfg.chunk_size]
                 base, real, xn, raw_last, updated = _transform_chunk(
-                    tf, chunk, None, norm, tlast
+                    tf, chunk, None, norm, extras["tlast"]
                 )
                 # shingling parity with the batch operator: the tail of
                 # the last s−1 transformed rows rides the state blob, so
                 # windows spanning micro-batch boundaries score exactly
                 # like an unbroken stream
-                pts, row_map, sh_tail = _shingle_points(sh_tail, xn, s_sh)
+                pts, row_map, extras["sh_tail"] = _shingle_points(extras["sh_tail"], xn, s_sh)
                 sq_p = sq[row_map]
                 if forest.is_output_ready and len(pts):
                     scores = forest.score(pts)
@@ -186,11 +149,9 @@ def streaming_drift_scores(
                     norm.update(real)
                 if len(pts):
                     forest.update_batch(pts, seqs=sq_p)
-                tlast = raw_last
-        if forest is not None:
-            state.update(
-                (bytearray(_pack(forest, th, norm, tlast, sh_tail)),)
-            )
+                extras["tlast"] = raw_last
+        if sketch is not None:
+            state.update((bytearray(_pack(*sketch)),))
         cols = key_cols + [order_col, "score", "threshold", "grade"]
         out = (
             np.concatenate(blocks)

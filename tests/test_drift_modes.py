@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from random_cut_forest_by_aws_spark.operators.drift import (
     DriftConfig,
@@ -658,3 +659,61 @@ def test_auto_adjust_checkpoint_resume_bit_exact(tmp_path):
     np.testing.assert_array_equal(fa_new["seq"].values, ra_new["seq"].values)
     np.testing.assert_allclose(fa_new["score"].values, ra_new["score"].values,
                                rtol=0, atol=0)
+
+
+# --------------------------------------------------------------------- #
+# checkpoints written by earlier code still resume
+# --------------------------------------------------------------------- #
+@pytest.mark.parametrize(
+    "name, kw",
+    [
+        ("recall_autoadjust", dict(scoring="multi_mode_recall", auto_adjust=True)),
+        ("shingled_difference", dict(shingle_size=3, transform="normalize_difference")),
+    ],
+)
+def test_committed_checkpoint_resumes_like_uninterrupted_pass(tmp_path, name, kw):
+    """``tests/data/drift_resume/<name>`` holds the checkpoint that the
+    previous checkpoint writer (forest RNG words re-encoded by drift, not
+    by ``RCFForest.to_state``) left after ``_run(cfg_ck, X[:1100])``.
+    Between them the two files carry every optional member: the distance
+    thresholder, autoAdjust state, the run-length attribution, a shingle
+    tail, the difference transform's last row and a replay buffer.
+    Read back and written again it gives the same members and arrays;
+    resuming it over all rows emits exactly the rows and summary of an
+    uninterrupted pass."""
+    import shutil
+    from pathlib import Path
+
+    from random_cut_forest_by_aws_spark.core.corrector import PredictorCorrector
+    from random_cut_forest_by_aws_spark.operators.drift import _load_group_state, _state_dict
+
+    rng = np.random.default_rng(17)
+    n, cut = 2000, 1100
+    X = rng.normal(0.0, 1.0, (n, 2))
+    X[1400:] += 4.0
+    X[1700] = [25.0, -25.0]
+    X[[500, 900]] = [15.0, -15.0]
+    X[1025:1040] += 12.0  # an anomaly run across the checkpoint's boundary
+    base = dict(num_trees=10, sample_size=32, chunk_size=256, buckets=1,
+                window=32, min_baseline_windows=3, **kw)
+    ckpt = tmp_path / name
+    shutil.copytree(Path(__file__).parent / "data" / "drift_resume" / name, ckpt)
+    (path,) = ckpt.iterdir()
+    forest, th, norm, extras, stored = _load_group_state(str(path))
+    corrector = PredictorCorrector(auto_adjust=True)
+    corrector.load_aa_state(stored)
+    again = _state_dict(forest, th, norm, extras, stored["buf_X"], stored["buf_seqs"],
+                        stored["buf_imp"], th2=extras.pop("th2", None), corrector=corrector)
+    assert sorted(again) == sorted(stored)
+    for k, v in stored.items():
+        assert again[k].dtype == v.dtype and again[k].shape == v.shape, k
+        np.testing.assert_array_equal(again[k], v, err_msg=k)
+    resumed = _run(DriftConfig(**base, checkpoint_dir=str(ckpt)), X)
+    full = _run(DriftConfig(**base), X)
+    full = full[(full.row_kind == "summary") | (full.seq >= cut)]
+
+    def rows(df):
+        return sorted(map(tuple, df.astype(object).itertuples(index=False)))
+
+    assert len(full[full.row_kind == "anomaly"]) > 0
+    assert rows(resumed) == rows(full)

@@ -220,16 +220,24 @@ def test_adaptive_bucketing_join_fallback_multi_group_cols(spark, seqs):
     assert cache_manager.cachedData().size() == n_cached
 
 
-def test_drift_null_group_is_bucketed_like_any_other(spark):
+@pytest.mark.parametrize("group_type", ["string", "decimal(10,2)"])
+def test_drift_null_group_is_bucketed_like_any_other(spark, group_type):
     """A null group value is a group like any other: the literal-map
     bucket count (one group column) and the broadcast join (two) give
     the null group the same buckets, and a suite run gives it a
-    distribution_drift verdict."""
+    distribution_drift verdict. The decimal column's values differ in
+    precision (9.75 is decimal(3,2), 16.25 decimal(4,2)), so the map's
+    key literals only share a type once cast to the column's."""
     from random_cut_forest_by_aws_spark.plans.suite import SuiteConfig, ValidationSuite
 
+    group = {
+        "string": F.col("source"),
+        "decimal(10,2)": (F.length("source") * 3.25).cast("decimal(10,2)"),
+    }[group_type]
     df = sequences(spark, 4000, seed=1).withColumn(
-        "source", F.when(F.col("seq") % 3 == 0, F.lit(None)).otherwise(F.col("source"))
+        "source", F.when(F.col("seq") % 3 == 0, F.lit(None)).otherwise(group)
     ).localCheckpoint(eager=True)
+    assert df.schema["source"].dataType.simpleString() == group_type
     feat = df.select("source", F.lit("x").alias("g2"), "seq",
                      token_features().alias("features"))
     cfg = _cfg(buckets=None, rows_per_bucket=500, num_trees=10, sample_size=32)

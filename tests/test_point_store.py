@@ -97,8 +97,6 @@ def test_compact_state_roundtrip_partial_fill():
 
 
 def _npz_bytes(state: dict) -> int:
-    state = dict(state)
-    state.pop("rng_state", None)  # object dtype; stored as ints by drift
     buf = io.BytesIO()
     np.savez_compressed(buf, **state)
     return buf.tell()

@@ -239,6 +239,29 @@ def test_checkpoint_roundtrip_bit_identical():
     np.testing.assert_array_equal(f1.score(Q), f2.score(Q))
 
 
+def test_to_state_round_trips_through_npz_without_pickle():
+    """``to_state`` is plain NumPy: saved with ``savez_compressed`` it
+    loads back with ``allow_pickle=False``, RNG streams included, so the
+    reloaded forest keeps scoring and updating exactly like the original."""
+    import io
+
+    rng = np.random.default_rng(5)
+    X = rng.normal(size=(800, 3)).astype(np.float32)
+    f1 = RCFForest(3, num_trees=6, sample_size=64, seed=4)
+    f1.update_batch(X[:400])
+    buf = io.BytesIO()
+    np.savez_compressed(buf, **f1.to_state())
+    buf.seek(0)
+    with np.load(buf, allow_pickle=False) as z:
+        f2 = RCFForest.from_state({k: z[k] for k in z.files})
+    Q = rng.normal(size=(20, 3)).astype(np.float32)
+    np.testing.assert_array_equal(f1.score(Q), f2.score(Q))
+    seqs = np.arange(400, 800, dtype=np.int64)
+    f1.update_batch(X[400:], seqs=seqs)
+    f2.update_batch(X[400:], seqs=seqs)
+    np.testing.assert_array_equal(f1.score(Q), f2.score(Q))
+
+
 def test_output_after_gate():
     f = RCFForest(2, num_trees=2, sample_size=16, seed=2)
     assert not f.is_output_ready

@@ -26,7 +26,6 @@ import os
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
-import pytest
 
 from random_cut_forest_by_aws_spark.streaming.dedup_stream import (
     streaming_dedup,
@@ -52,7 +51,6 @@ def _write_batches(src_dir: str, batches: list[list[tuple[str, str]]]) -> None:
         os.utime(path, (base_mtime + i * 10, base_mtime + i * 10))
 
 
-@pytest.mark.timeout(600)
 def test_streaming_dedup_horizon_and_eviction(spark, tmp_path):
     src_dir = str(tmp_path / "dedup_src")
     ckpt = str(tmp_path / "dedup_ckpt")
@@ -79,7 +77,10 @@ def test_streaming_dedup_horizon_and_eviction(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    try:
+        assert q.awaitTermination(300), "query did not finish in 300 s"
+    finally:
+        q.stop()
     res = spark.sql("SELECT * FROM dedup_stream_out").toPandas()
     got = {(r.doc_id, r.ts.strftime("%H:%M")) for r in res.itertuples()}
     assert got == {

@@ -4,7 +4,6 @@ forest state carried in GroupState (availableNow trigger + memory sink)."""
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from random_cut_forest_by_aws_spark.functions import token_features
 from random_cut_forest_by_aws_spark.operators.drift import DriftConfig
@@ -12,7 +11,6 @@ from random_cut_forest_by_aws_spark.sources import sequences
 from random_cut_forest_by_aws_spark.streaming import streaming_drift_scores
 
 
-@pytest.mark.timeout(600)
 def test_streaming_drift_scores(spark, tmp_path):
     src_dir = str(tmp_path / "stream_src")
     ckpt = str(tmp_path / "stream_ckpt")
@@ -32,7 +30,10 @@ def test_streaming_drift_scores(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    try:
+        assert q.awaitTermination(300), "query did not finish in 300 s"
+    finally:
+        q.stop()
     res = spark.sql("SELECT * FROM drift_stream_out").toPandas()
     assert len(res) > 0
     assert {"source", "bucket", "seq", "score", "threshold", "grade"} <= set(res.columns)
@@ -43,7 +44,6 @@ def test_streaming_drift_scores(spark, tmp_path):
     assert np.isfinite(web["score"]).all()
 
 
-@pytest.mark.timeout(600)
 def test_streaming_drift_subtract_ma_transform(spark, tmp_path):
     """Streaming supports the full TransformMethod set (parity with the
     batch operator): SUBTRACT_MA carries its discounted mean (and the
@@ -63,14 +63,16 @@ def test_streaming_drift_subtract_ma_transform(spark, tmp_path):
         out.writeStream.format("memory").queryName("drift_stream_sub")
         .option("checkpointLocation", ckpt).trigger(availableNow=True).start()
     )
-    q.awaitTermination(300)
+    try:
+        assert q.awaitTermination(300), "query did not finish in 300 s"
+    finally:
+        q.stop()
     res = spark.sql("SELECT * FROM drift_stream_sub").toPandas()
     assert len(res) > 1000
     assert np.isfinite(res["score"]).all()
     assert (res["score"] >= 0).all()
 
 
-@pytest.mark.timeout(600)
 def test_streaming_drift_shingled_matches_batch(spark, tmp_path):
     """shingle_size > 1 in streaming: the transformed-row tail rides
     GroupState, so windows spanning micro-batch boundaries score exactly
@@ -118,7 +120,10 @@ def test_streaming_drift_shingled_matches_batch(spark, tmp_path):
         out.writeStream.format("memory").queryName("drift_stream_sh")
         .option("checkpointLocation", ckpt).trigger(availableNow=True).start()
     )
-    q.awaitTermination(300)
+    try:
+        assert q.awaitTermination(300), "query did not finish in 300 s"
+    finally:
+        q.stop()
     res = spark.sql("SELECT * FROM drift_stream_sh").toPandas()
     # batch reference over the same rows, same config
     from random_cut_forest_by_aws_spark.operators.drift import _make_drift_fn

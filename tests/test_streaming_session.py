@@ -30,7 +30,6 @@ import os
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
-import pytest
 
 from random_cut_forest_by_aws_spark.streaming.window_stream import (
     streaming_session_agg,
@@ -63,7 +62,6 @@ def _write_batches(src_dir: str, batches: list[list[tuple[str, str]]]) -> None:
         os.utime(path, (base_mtime + i * 10, base_mtime + i * 10))
 
 
-@pytest.mark.timeout(600)
 def test_streaming_session_merge_and_finalize_once(spark, tmp_path):
     src_dir = str(tmp_path / "sess_src")
     ckpt = str(tmp_path / "sess_ckpt")
@@ -94,7 +92,10 @@ def test_streaming_session_merge_and_finalize_once(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    try:
+        assert q.awaitTermination(300), "query did not finish in 300 s"
+    finally:
+        q.stop()
     res = spark.sql("SELECT * FROM sess_stream_out").toPandas()
     got = {
         (r["user_id"], int(r["ws"]), int(r["we"])): int(r["n_events"])
