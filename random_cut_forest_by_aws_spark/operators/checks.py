@@ -32,12 +32,26 @@ engine" calls for (cf. deequ's ``Check``/``VerificationSuite``).
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
+from decimal import ROUND_HALF_UP, Context, Decimal
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _OPS = {">=", "<="}
+
+
+def _spark_round(x: float, dp: int) -> float:
+    """``F.round(x, dp)`` on the driver: HALF_UP on the shortest decimal
+    form of ``x``, as Spark rounds a double. Python's ``round`` is
+    half-to-even on the binary value (``round(5e-7, 6)`` is 0.0, Spark
+    reads 1e-06). Non-finite values pass through."""
+    if not math.isfinite(x):
+        return x
+    return float(Decimal(repr(x)).quantize(
+        Decimal(1).scaleb(-dp), ROUND_HALF_UP, Context(prec=1000)))
+
 
 #: builder methods reachable from JSON specs (plans/job.py --rules-json)
 _SPEC_METHODS = frozenset({
@@ -704,8 +718,6 @@ class Check:
         metrics are one tiny row, so this is pure Python arithmetic
         mirroring ``run()``'s column expressions (NULL ⇒ fail closed).
         """
-        import math
-
         n = metrics["__n"]
         out = []
         for i, r in enumerate(self._rules):
@@ -753,7 +765,7 @@ class Check:
                 "check": self.name,
                 "constraint": r.name,
                 "column": r.column,
-                "metric": (round(metric, self.round_dp)
+                "metric": (_spark_round(float(metric), self.round_dp)
                            if metric is not None else None),
                 "op": r.op,
                 "threshold": r.threshold,

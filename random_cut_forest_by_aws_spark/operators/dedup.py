@@ -199,11 +199,26 @@ def minhash_signature(
 DEFAULT_MAX_BUCKET = 64
 
 
-def _pairs_within(ids: Column) -> Column:
-    """All ordered (id_a < id_b) pairs from one bucket's sorted id list —
-    the pair-explosion expression shared by the self-join candidate
-    generators (array<struct<id_a, id_b>>, JVM-side)."""
-    return F.filter(
+def _bucket_pairs(
+    keyed: DataFrame,
+    id_col: str,
+    key_cols: Sequence[str],
+    max_bucket: int,
+    collect=F.collect_list,
+) -> DataFrame:
+    """``(id_a, id_b)``, id_a < id_b, once per bucket the two ids share —
+    the core of every self-join candidate generator. ``keyed`` holds
+    one row per (id, bucket key); ``collect`` gathers each key's ids
+    (winnowing passes ``F.collect_set``), and buckets of one id or of
+    more than ``max_bucket`` ids are dropped before the JVM-side pair
+    explosion."""
+    buckets = (
+        keyed.groupBy(*key_cols)
+        .agg(F.sort_array(collect(id_col)).alias("ids"))
+        .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket))
+    )
+    ids = F.col("ids")
+    pairs = F.filter(
         F.flatten(
             F.transform(
                 ids,
@@ -215,6 +230,7 @@ def _pairs_within(ids: Column) -> Column:
         ),
         lambda s: s.isNotNull(),
     )
+    return buckets.select(F.explode(pairs).alias("p")).select("p.id_a", "p.id_b")
 
 
 def _band_buckets(
@@ -279,17 +295,8 @@ def minhash_candidates(
     the S-curve centers near s ≈ 0.56.
     """
     banded = _band_buckets(df, id_col, text_col, shingle_k, num_hashes, bands, seed)
-    buckets = (
-        banded.groupBy("bb.band", "bb.bucket")
-        .agg(F.sort_array(F.collect_list("_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .filter(F.size("ids") <= DEFAULT_MAX_BUCKET)
-    )
-    pairs = buckets.select(F.explode(_pairs_within(F.col("ids"))).alias("p"))
-    return (
-        pairs.groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
+    pairs = _bucket_pairs(banded, "_id", ["bb.band", "bb.bucket"], DEFAULT_MAX_BUCKET)
+    return pairs.groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("n_shared_bands"))
 
 
 def minhash_candidates_incremental(
@@ -464,15 +471,8 @@ def winnow_candidates(
 def _shared_fp_pairs(fps: DataFrame, id_col: str, max_bucket: int) -> DataFrame:
     """(id_a, id_b, n_shared_fps) from an exploded (id, fp) table:
     same-fp pairs via the bucket-guarded group-and-explode."""
-    buckets = (
-        fps.groupBy("fp")
-        .agg(F.sort_array(F.collect_set(id_col)).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket))
-    )
-    pairs = buckets.select(F.explode(_pairs_within(F.col("ids"))).alias("p"))
-    return pairs.groupBy(
-        F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b")
-    ).agg(F.count(F.lit(1)).alias("n_shared_fps"))
+    pairs = _bucket_pairs(fps, id_col, ["fp"], max_bucket, F.collect_set)
+    return pairs.groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("n_shared_fps"))
 
 
 def winnow_containment(
@@ -654,13 +654,7 @@ def simhash_candidates(sims: DataFrame, id_col: str = "doc_id", bands: int = 4) 
             )
         ).alias("bb"),
     )
-    buckets = (
-        exploded.groupBy("bb.band", "bb.bucket")
-        .agg(F.sort_array(F.collect_list("_id")).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= DEFAULT_MAX_BUCKET))
-    )
-    pairs = buckets.select(F.explode(_pairs_within(F.col("ids"))).alias("p"))
-    return pairs.select("p.id_a", "p.id_b").distinct()
+    return _bucket_pairs(exploded, "_id", ["bb.band", "bb.bucket"], DEFAULT_MAX_BUCKET).distinct()
 
 
 def ngram_jaccard(

@@ -7,8 +7,8 @@ question: "did the *distribution* of a column move between two snapshots
 of the table?" (yesterday's corpus vs today's crawl, train vs serve).
 This operator is the classic statistical-drift toolbox over histogram
 aggregates — the TFDV / deequ-style checks — expressed as pure
-DataFrame aggregations so the whole computation is two map-side-combined
-histogram aggregates plus arithmetic over the tiny joined histogram.
+DataFrame aggregations so the whole computation is one map-side-combined
+histogram aggregate plus arithmetic over the tiny pivoted histogram.
 
 Metrics per group (all computed from smoothed bin probabilities
 ``p_i = (a_i + s) / (A + s·B)`` with ``s`` the Laplace smoothing constant
@@ -25,6 +25,15 @@ replayable in any engine):
 * ``tvd``  — total variation distance ½·sum|p−q|.
 * ``chi2`` — two-sample chi-square with pooled expecteds
   E_a,i = (a_i+b_i)·A/(A+B) over raw (unsmoothed) counts.
+
+Every comparator is a short front end over ONE pipeline: side-tagged
+weighted entries ``(keys..., __side, __w)`` → ``_pivot_counts`` →
+``_drift_metrics`` (``_centroid_metrics`` for embeddings). The front
+ends only build the entries: ``_bin_entries`` (one column),
+``_stacked_entries`` (many columns), ``_gram_entries`` (token n-grams)
+or ``_embedding_entries``, tagged ``F.lit(0)``/``F.lit(1)`` per
+snapshot or ``F.col("__side")`` after ``_split_side`` (both snapshots
+in one table); a stored profile enters as rows weighted by its counts.
 
 Scale shape (what Catalyst sees at 10^12 rows): the two snapshots are
 tagged with a side bit and unioned, and ONE partial→final HashAggregate
@@ -52,7 +61,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -89,47 +98,62 @@ def _pivot_counts(tagged: DataFrame, keys: list[str], gkeys: list[str]) -> DataF
     return joined.crossJoin(F.broadcast(totals))
 
 
-def _joined_hist(
-    base: DataFrame,
-    current: DataFrame,
+def _split_side(df: DataFrame, base_predicate) -> DataFrame:
+    """``df`` with ``__side`` computed from a predicate (Column or SQL
+    string): 0 where TRUE, 1 where FALSE; rows where it is NULL are
+    dropped, since they cannot be attributed to either snapshot."""
+    pred = F.expr(base_predicate) if isinstance(base_predicate, str) else base_predicate
+    return df.withColumn(
+        "__side", F.when(pred, F.lit(0)).when(~pred, F.lit(1))
+    ).filter(F.col("__side").isNotNull())
+
+
+def _bin_entries(
+    df: DataFrame,
     value_col: str,
     group_by: list[str],
     bin_width: float | None,
+    side: Column,
 ) -> DataFrame:
-    def tag(df: DataFrame, side: int) -> DataFrame:
-        v = F.col(value_col)
-        b = (F.floor(v / F.lit(bin_width)).cast("long")
-             if bin_width is not None else v.cast("string"))
-        return df.select(*group_by, b.alias("bin"),
-                         F.lit(side).alias("__side"),
-                         F.lit(1).cast("long").alias("__w"))
+    """One ``(group..., bin, __side, __w)`` entry per row of ``df``."""
+    v = F.col(value_col)
+    b = (F.floor(v / F.lit(bin_width)).cast("long")
+         if bin_width is not None else v.cast("string"))
+    return df.select(*group_by, b.alias("bin"), side.alias("__side"),
+                     F.lit(1).cast("long").alias("__w"))
 
-    tagged = tag(base, 0).unionByName(tag(current, 1))
-    return _pivot_counts(tagged, group_by + ["bin"], group_by)
+
+def _smoothed(smoothing: float) -> tuple[Column, Column]:
+    """Smoothed bin probabilities ``(p, q)`` of a pivoted histogram's
+    base and current sides."""
+    s = F.lit(float(smoothing))
+    nb = F.col("n_bins").cast("double")
+    p = (F.col("cnt_a").cast("double") + s) / (F.col("n_base").cast("double") + s * nb)
+    q = (F.col("cnt_b").cast("double") + s) / (F.col("n_curr").cast("double") + s * nb)
+    return p, q
 
 
 def _drift_metrics(
-    hist: DataFrame,
+    tagged: DataFrame,
     gkeys: list[str],
-    order_cols: list[str],
+    bin_cols: list[str],
     lead_col: str | None,
     w1_width,
     smoothing: float,
     round_dp: int,
 ) -> DataFrame:
-    """Shared metric block over a joined histogram: one output row per
-    ``gkeys`` with the full metric set. ``order_cols`` define the ECDF
-    order for KS/W1 (NULL bins first, matching Spark's default asc
-    order); ``lead_col`` is the numeric bin column used for W1 step
-    weights; ``w1_width`` is a double Column (NULL ⇒ W1 undefined)."""
-    s = F.lit(float(smoothing))
+    """Shared metric block over a side-tagged entry relation: pivots it
+    on ``gkeys + bin_cols`` and returns one output row per ``gkeys``
+    with the full metric set. ``bin_cols`` also define the ECDF order
+    for KS/W1 (NULL bins first, matching Spark's default asc order);
+    ``lead_col`` is the numeric bin column used for W1 step weights;
+    ``w1_width`` is a double Column (NULL ⇒ W1 undefined)."""
+    hist = _pivot_counts(tagged, gkeys + bin_cols, gkeys)
     a = F.col("cnt_a").cast("double")
     b = F.col("cnt_b").cast("double")
     A = F.col("n_base").cast("double")
     B = F.col("n_curr").cast("double")
-    nb = F.col("n_bins").cast("double")
-    p = (a + s) / (A + s * nb)
-    q = (b + s) / (B + s * nb)
+    p, q = _smoothed(smoothing)
     m = (p + q) / F.lit(2.0)
 
     psi_term = (p - q) * (F.log(p) - F.log(q))
@@ -145,7 +169,7 @@ def _drift_metrics(
     # the per-bin ECDF gap. The window partitions on the group keys only
     # — aggregate-bounded input, so the per-partition sort is over
     # |bins| rows, never row-scale.
-    order = [F.col(c).asc_nulls_first() for c in order_cols]
+    order = [F.col(c).asc_nulls_first() for c in bin_cols]
     wks = (
         Window.partitionBy(*gkeys)
         .orderBy(*order)
@@ -232,11 +256,12 @@ def snapshot_drift(
     undefined and the column is NULL.
     """
     group_by = list(group_by)
-    hist = _joined_hist(base, current, value_col, group_by, bin_width)
+    tagged = (_bin_entries(base, value_col, group_by, bin_width, F.lit(0))
+              .unionByName(_bin_entries(current, value_col, group_by, bin_width, F.lit(1))))
     if bin_width is not None:
-        return _drift_metrics(hist, group_by, ["bin"], "bin",
+        return _drift_metrics(tagged, group_by, ["bin"], "bin",
                               F.lit(float(bin_width)), smoothing, round_dp)
-    return _drift_metrics(hist, group_by, ["bin"], None, None,
+    return _drift_metrics(tagged, group_by, ["bin"], None, None,
                           smoothing, round_dp)
 
 
@@ -266,26 +291,24 @@ def snapshot_drift_multi(
     bin), so numeric ECDF order is preserved per column for KS/W1 while
     everything shares one stacked relation.
     """
-    if not value_cols:
-        raise ValueError("value_cols must name at least one column")
     group_by = list(group_by)
-
-    tagged = (_stacked_entries(base, value_cols, group_by, 0)
-              .unionByName(_stacked_entries(current, value_cols, group_by, 1)))
-    gkeys = group_by + ["column"]
-    hist = _pivot_counts(tagged, gkeys + ["bin_num", "bin_cat"], gkeys)
-    return _drift_metrics(hist, gkeys, ["bin_num", "bin_cat"], "bin_num",
-                          _w1_width(value_cols), smoothing, round_dp)
+    tagged = (_stacked_entries(base, value_cols, group_by, F.lit(0))
+              .unionByName(_stacked_entries(current, value_cols, group_by, F.lit(1))))
+    return _column_drift(tagged, value_cols, group_by, smoothing, round_dp)
 
 
 def _stacked_entries(
     df: DataFrame,
     value_cols: dict[str, float | None],
     group_by: list[str],
-    side: int,
+    side: Column,
 ) -> DataFrame:
     """Explode each row into k (column, bin_num, bin_cat) entries with a
-    side tag and unit weight — the input shape of _pivot_counts."""
+    side tag and unit weight — the input shape of _pivot_counts.
+    ``side`` is ``F.lit(0)``/``F.lit(1)`` for a whole snapshot, or
+    ``F.col("__side")`` after ``_split_side``."""
+    if not value_cols:
+        raise ValueError("value_cols must name at least one column")
     entries = []
     for c, bw in value_cols.items():
         v = F.col(c)
@@ -298,19 +321,28 @@ def _stacked_entries(
         entries.append(F.struct(
             F.lit(c).alias("column"), bn.alias("bin_num"), bc.alias("bin_cat")
         ))
-    ex = df.select(*group_by, F.explode(F.array(*entries)).alias("e"))
-    return ex.select(*group_by, "e.column", "e.bin_num", "e.bin_cat",
-                     F.lit(side).alias("__side"),
+    ex = df.select(*group_by, side.alias("__side"),
+                   F.explode(F.array(*entries)).alias("e"))
+    return ex.select(*group_by, "e.column", "e.bin_num", "e.bin_cat", "__side",
                      F.lit(1).cast("long").alias("__w"))
 
 
-def _w1_width(value_cols: dict[str, float | None]):
-    """Per-column W1 step width: NULL for categorical columns."""
+def _column_drift(
+    tagged: DataFrame,
+    value_cols: dict[str, float | None],
+    group_by: list[str],
+    smoothing: float,
+    round_dp: int,
+) -> DataFrame:
+    """Metric rows per (group..., column) of stacked entries; the W1
+    step width is each column's bin width, NULL for categorical ones."""
     width = F.lit(None).cast("double")
     for c, bw in value_cols.items():
         if bw is not None:
             width = F.when(F.col("column") == c, F.lit(float(bw))).otherwise(width)
-    return width
+    gkeys = group_by + ["column"]
+    return _drift_metrics(tagged, gkeys, ["bin_num", "bin_cat"], "bin_num",
+                          width, smoothing, round_dp)
 
 
 def snapshot_drift_split(
@@ -333,35 +365,10 @@ def snapshot_drift_split(
     (a row that cannot be attributed to a side must not silently load
     either histogram).
     """
-    if not value_cols:
-        raise ValueError("value_cols must name at least one column")
     group_by = list(group_by)
-    pred = F.expr(base_predicate) if isinstance(base_predicate, str) else base_predicate
-    sided = df.withColumn(
-        "__side", F.when(pred, F.lit(0)).when(~pred, F.lit(1))
-    ).filter(F.col("__side").isNotNull())
-    # _stacked_entries would overwrite __side; inline the stacking with
-    # the computed side instead.
-    entries = []
-    for c, bw in value_cols.items():
-        v = F.col(c)
-        if bw is not None:
-            bn = F.floor(v / F.lit(float(bw))).cast("long")
-            bc = F.lit(None).cast("string")
-        else:
-            bn = F.lit(None).cast("long")
-            bc = v.cast("string")
-        entries.append(F.struct(
-            F.lit(c).alias("column"), bn.alias("bin_num"), bc.alias("bin_cat")
-        ))
-    tagged = sided.select(
-        *group_by, F.col("__side"), F.explode(F.array(*entries)).alias("e")
-    ).select(*group_by, "e.column", "e.bin_num", "e.bin_cat", "__side",
-             F.lit(1).cast("long").alias("__w"))
-    gkeys = group_by + ["column"]
-    hist = _pivot_counts(tagged, gkeys + ["bin_num", "bin_cat"], gkeys)
-    return _drift_metrics(hist, gkeys, ["bin_num", "bin_cat"], "bin_num",
-                          _w1_width(value_cols), smoothing, round_dp)
+    tagged = _stacked_entries(_split_side(df, base_predicate), value_cols,
+                              group_by, F.col("__side"))
+    return _column_drift(tagged, value_cols, group_by, smoothing, round_dp)
 
 
 def histogram_profile(
@@ -379,10 +386,8 @@ def histogram_profile(
     (``snapshot_drift_vs_profile``) — yesterday's 100 TB is never
     rescanned.
     """
-    if not value_cols:
-        raise ValueError("value_cols must name at least one column")
     group_by = list(group_by)
-    ex = _stacked_entries(df, value_cols, group_by, 0)
+    ex = _stacked_entries(df, value_cols, group_by, F.lit(0))
     return (
         ex.groupBy(*group_by, "column", "bin_num", "bin_cat")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -404,20 +409,13 @@ def snapshot_drift_vs_profile(
     ``value_cols`` must match the profile's binning exactly (same
     columns, same bin widths) — the bins are compared by value.
     """
-    if not value_cols:
-        raise ValueError("value_cols must name at least one column")
     group_by = list(group_by)
-    base_tagged = profile.select(
+    curr_tagged = _stacked_entries(current, value_cols, group_by, F.lit(1))
+    tagged = profile.select(
         *group_by, "column", "bin_num", "bin_cat",
         F.lit(0).alias("__side"), F.col("cnt").cast("long").alias("__w"),
-    )
-    tagged = base_tagged.unionByName(
-        _stacked_entries(current, value_cols, group_by, 1)
-    )
-    gkeys = group_by + ["column"]
-    hist = _pivot_counts(tagged, gkeys + ["bin_num", "bin_cat"], gkeys)
-    return _drift_metrics(hist, gkeys, ["bin_num", "bin_cat"], "bin_num",
-                          _w1_width(value_cols), smoothing, round_dp)
+    ).unionByName(curr_tagged)
+    return _column_drift(tagged, value_cols, group_by, smoothing, round_dp)
 
 
 def embedding_drift(
@@ -440,47 +438,53 @@ def embedding_drift(
     Scale shape: ``posexplode`` multiplies rows ×dims BEFORE a
     partial→final HashAggregate on (group, dim) — map-side combine
     collapses each task to at most |groups|×dims partial rows, so the
-    exchange is aggregate-bounded, never row-scale. The centroid join
-    and metric arithmetic run over |groups|×dims rows. Rows with NULL
+    exchange is aggregate-bounded, never row-scale. The metric
+    arithmetic runs over |groups|×dims rows. Rows with NULL
     embeddings are dropped by posexplode (count them upstream with a
     completeness check if null-rate matters). float32 values are cast
     to double BEFORE summing (exact widening), so the oracle replays
     the arithmetic with the same precision.
     """
     group_by = list(group_by)
+    tagged = (_embedding_entries(base, emb_col, group_by, F.lit(0))
+              .unionByName(_embedding_entries(current, emb_col, group_by, F.lit(1))))
+    return _centroid_metrics(tagged, group_by, round_dp)
 
-    # side-tagged union + ONE (group, dim) aggregate with conditional
-    # sums replaces two per-side aggregates + an inner join (same
-    # single-exchange shape as _pivot_counts; dims present on only one
-    # side are dropped afterwards, preserving the old inner-join
-    # semantics).
-    def tag(df: DataFrame, side: int) -> DataFrame:
-        return df.select(
-            *group_by,
-            F.posexplode(F.col(emb_col)).alias("dim", "val"),
-            F.lit(side).alias("__side"),
-        )
 
-    u = tag(base, 0).unionByName(tag(current, 1))
+def _embedding_entries(
+    df: DataFrame, emb_col: str, group_by: list[str], side: Column
+) -> DataFrame:
+    """One ``(group..., dim, val, __side, __w)`` entry per embedding
+    element, unit weight."""
+    return df.select(
+        *group_by,
+        F.posexplode(F.col(emb_col)).alias("dim", "val"),
+        side.alias("__side"),
+        F.lit(1).cast("long").alias("__w"),
+    )
+
+
+def _centroid_metrics(tagged: DataFrame, group_by: list[str], round_dp: int) -> DataFrame:
+    """Per-group cosine/L2/L-inf centroid arithmetic over side-tagged
+    weighted ``(group..., dim, val, __side, __w)`` moment entries.
+
+    ONE (group, dim) aggregate with conditional sums (the single-exchange
+    shape of _pivot_counts) gives each side's sum and weight; a dim
+    with no entries on one side has a NULL weight there, and ``c > 0``
+    drops it (inner-join semantics between the two centroids)."""
     side_a = F.col("__side") == 0
     side_b = F.col("__side") == 1
     val = F.col("val").cast("double")
     cent = (
-        u.groupBy(*group_by, "dim")
+        tagged.groupBy(*group_by, "dim")
         .agg(
             F.sum(F.when(side_a, val)).alias("s_a"),
-            F.count(F.when(side_a, 1)).alias("c_a"),
+            F.sum(F.when(side_a, F.col("__w"))).alias("c_a"),
             F.sum(F.when(side_b, val)).alias("s_b"),
-            F.count(F.when(side_b, 1)).alias("c_b"),
+            F.sum(F.when(side_b, F.col("__w"))).alias("c_b"),
         )
         .filter((F.col("c_a") > 0) & (F.col("c_b") > 0))
     )
-    return _centroid_metrics(cent, group_by, round_dp)
-
-
-def _centroid_metrics(cent: DataFrame, group_by: list[str], round_dp: int) -> DataFrame:
-    """Final per-group cosine/L2/L-inf arithmetic over a per-(group,
-    dim) moment relation ``(group..., dim, s_a, c_a, s_b, c_b)``."""
     j = cent.select(
         *group_by,
         "dim",
@@ -549,34 +553,13 @@ def embedding_drift_vs_profile(
     (group, dim) aggregate as pre-aggregated moment rows, so only
     ``current`` is scanned."""
     group_by = list(group_by)
-    base_tagged = profile.select(
+    tagged = profile.select(
         *group_by, "dim",
         F.col("s").cast("double").alias("val"),
-        F.col("c").cast("long").alias("__w"),
         F.lit(0).alias("__side"),
-    )
-    curr_tagged = current.select(
-        *group_by,
-        F.posexplode(F.col(emb_col)).alias("dim", "val"),
-    ).select(
-        *group_by, "dim", F.col("val").cast("double").alias("val"),
-        F.lit(1).cast("long").alias("__w"), F.lit(1).alias("__side"),
-    )
-    u = base_tagged.unionByName(curr_tagged)
-    side_a = F.col("__side") == 0
-    side_b = F.col("__side") == 1
-    cent = (
-        u.groupBy(*group_by, "dim")
-        .agg(
-            F.sum(F.when(side_a, F.col("val"))).alias("s_a"),
-            F.sum(F.when(side_a, F.col("__w"))).alias("c_a"),
-            F.sum(F.when(side_b, F.col("val"))).alias("s_b"),
-            F.sum(F.when(side_b, F.col("__w"))).alias("c_b"),
-        )
-        .filter(F.col("c_a").isNotNull() & F.col("c_b").isNotNull()
-                & (F.col("c_a") > 0) & (F.col("c_b") > 0))
-    )
-    return _centroid_metrics(cent, group_by, round_dp)
+        F.col("c").cast("long").alias("__w"),
+    ).unionByName(_embedding_entries(current, emb_col, group_by, F.lit(1)))
+    return _centroid_metrics(tagged, group_by, round_dp)
 
 
 def snapshot_drift_bins(
@@ -592,15 +575,10 @@ def snapshot_drift_bins(
     per-bin PSI contribution — the detail rows behind ``snapshot_drift``
     (which bins moved, not just that the column moved)."""
     group_by = list(group_by)
-    hist = _joined_hist(base, current, value_col, group_by, bin_width)
-    s = F.lit(float(smoothing))
-    a = F.col("cnt_a").cast("double")
-    b = F.col("cnt_b").cast("double")
-    A = F.col("n_base").cast("double")
-    B = F.col("n_curr").cast("double")
-    nb = F.col("n_bins").cast("double")
-    p = (a + s) / (A + s * nb)
-    q = (b + s) / (B + s * nb)
+    tagged = (_bin_entries(base, value_col, group_by, bin_width, F.lit(0))
+              .unionByName(_bin_entries(current, value_col, group_by, bin_width, F.lit(1))))
+    hist = _pivot_counts(tagged, group_by + ["bin"], group_by)
+    p, q = _smoothed(smoothing)
     return hist.select(
         *group_by,
         "bin",
@@ -612,12 +590,20 @@ def snapshot_drift_bins(
     )
 
 
-def _gram_bins(tokens_col: str, ngram: int, sep: str):
-    """Array-of-string n-gram bins for one row's token array.
+def _gram_entries(
+    df: DataFrame,
+    tokens_col: str,
+    group_by: list[str],
+    ngram: int,
+    sep: str,
+    side: Column,
+) -> DataFrame:
+    """One ``(group..., bin, __side, __w)`` entry per n-gram occurrence
+    of a token-array column, the bin being the gram as a string.
 
-    ``ngram=1`` returns the tokens themselves cast to string (works for
+    ``ngram=1`` bins the tokens themselves cast to string (works for
     ``array<int>`` token ids and ``array<string>`` word tokens alike).
-    ``ngram>1`` returns the ``size−ngram+1`` adjacent grams joined with
+    ``ngram>1`` bins the ``size−ngram+1`` adjacent grams joined with
     ``sep`` via ``concat_ws`` — which SKIPS NULL elements in both Spark
     and DuckDB, the documented (engine-portable) convention for NULL
     tokens inside a gram. The index ``sequence`` is guarded by an
@@ -628,16 +614,19 @@ def _gram_bins(tokens_col: str, ngram: int, sep: str):
     which ``explode`` drops (a document with no grams contributes no
     histogram mass).
     """
-    sv = F.transform(F.col(tokens_col), lambda x: x.cast("string"))
-    if ngram == 1:
-        return sv
-    n = F.size(sv)
-    idx = F.sequence(F.lit(1), n - F.lit(ngram - 1))
-    return F.when(
-        n >= F.lit(ngram),
-        F.transform(idx, lambda i: F.concat_ws(
-            sep, *[F.element_at(sv, i + F.lit(j)) for j in range(ngram)])),
-    ).otherwise(F.array().cast("array<string>"))
+    if ngram < 1:
+        raise ValueError("ngram must be >= 1")
+    grams = sv = F.transform(F.col(tokens_col), lambda x: x.cast("string"))
+    if ngram > 1:
+        n = F.size(sv)
+        idx = F.sequence(F.lit(1), n - F.lit(ngram - 1))
+        grams = F.when(
+            n >= F.lit(ngram),
+            F.transform(idx, lambda i: F.concat_ws(
+                sep, *[F.element_at(sv, i + F.lit(j)) for j in range(ngram)])),
+        ).otherwise(F.array().cast("array<string>"))
+    return df.select(*group_by, F.explode(grams).alias("bin"),
+                     side.alias("__side"), F.lit(1).cast("long").alias("__w"))
 
 
 def token_drift(
@@ -677,21 +666,12 @@ def token_drift(
     the RCF stream detector (TFDV ``jensen_shannon_divergence`` /
     deequ histogram-distance style).
     """
-    if ngram < 1:
-        raise ValueError("ngram must be >= 1")
     group_by = list(group_by)
-
-    def tag(df: DataFrame, side: int) -> DataFrame:
-        return df.select(
-            *group_by,
-            F.explode(_gram_bins(tokens_col, ngram, sep)).alias("bin"),
-            F.lit(side).alias("__side"),
-            F.lit(1).cast("long").alias("__w"),
-        )
-
-    tagged = tag(base, 0).unionByName(tag(current, 1))
-    hist = _pivot_counts(tagged, group_by + ["bin"], group_by)
-    return _drift_metrics(hist, group_by, ["bin"], None, None,
+    tagged = (
+        _gram_entries(base, tokens_col, group_by, ngram, sep, F.lit(0))
+        .unionByName(_gram_entries(current, tokens_col, group_by, ngram, sep, F.lit(1)))
+    )
+    return _drift_metrics(tagged, group_by, ["bin"], None, None,
                           smoothing, round_dp)
 
 
@@ -709,19 +689,8 @@ def token_drift_split(
     predicate (date partitions, crawl ids, A/B cohorts) — the side is
     computed inside ONE FileScan instead of planning two (same rationale
     and NULL-predicate exclusion rule as ``snapshot_drift_split``)."""
-    if ngram < 1:
-        raise ValueError("ngram must be >= 1")
     group_by = list(group_by)
-    pred = F.expr(base_predicate) if isinstance(base_predicate, str) else base_predicate
-    sided = df.withColumn(
-        "__side", F.when(pred, F.lit(0)).when(~pred, F.lit(1))
-    ).filter(F.col("__side").isNotNull())
-    tagged = sided.select(
-        *group_by,
-        F.explode(_gram_bins(tokens_col, ngram, sep)).alias("bin"),
-        F.col("__side"),
-        F.lit(1).cast("long").alias("__w"),
-    )
-    hist = _pivot_counts(tagged, group_by + ["bin"], group_by)
-    return _drift_metrics(hist, group_by, ["bin"], None, None,
+    tagged = _gram_entries(_split_side(df, base_predicate), tokens_col,
+                           group_by, ngram, sep, F.col("__side"))
+    return _drift_metrics(tagged, group_by, ["bin"], None, None,
                           smoothing, round_dp)

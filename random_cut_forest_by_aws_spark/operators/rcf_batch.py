@@ -12,13 +12,36 @@ engine core.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..core.forest import RCFForest
 from ..core.queries import density as _density
 from ..core.queries import extrapolate as _extrapolate
 from .drift import _group_seed
+
+
+def _fit_forest(X: np.ndarray, key, num_trees: int, sample_size: int, seed: int) -> RCFForest:
+    """One group's forest, trained on all of its points (no time decay),
+    seeded from the group key."""
+    forest = RCFForest(
+        X.shape[1], num_trees=num_trees, sample_size=sample_size,
+        time_decay=0.0, seed=_group_seed(tuple(key), seed),
+    )
+    forest.update_batch(X)
+    return forest
+
+
+def _per_group(
+    df: DataFrame, gcols: list[str], cols: list[str], keep: list[str], fields: str, fn
+) -> DataFrame:
+    """``fn(key, pdf)`` over each ``gcols`` group of ``df[cols]``, spread
+    over max(2 × default parallelism, 16) partitions. ``fn`` returns the
+    ``keep`` columns (typed as in ``df``) followed by ``fields`` (DDL)."""
+    prefix = ", ".join(f"{c} {t}" for c, t in df.select(*keep).dtypes)
+    sc = df.sparkSession.sparkContext
+    grouped = df.select(*cols).repartition(max(sc.defaultParallelism * 2, 16), *gcols)
+    return grouped.groupBy(*gcols).applyInPandas(fn, f"{prefix}, {fields}")
 
 
 def rcf_group_scores(
@@ -41,20 +64,10 @@ def rcf_group_scores(
     slabs, trading the (1±p)·score ± p band for less compute on large
     cohorts."""
     gcols = list(group_cols)
-    schema_prefix = ", ".join(f"{c} {t}" for c, t in df.select(*gcols, id_col).dtypes)
-    out_schema = f"{schema_prefix}, score double" + (
-        ", density double" if with_density else ""
-    )
 
     def fn(key, pdf):
-        import pandas as pd
-
         X = np.stack(pdf[vec_col].to_numpy()).astype(np.float32)
-        forest = RCFForest(
-            X.shape[1], num_trees=num_trees, sample_size=sample_size,
-            time_decay=0.0, seed=_group_seed(tuple(key), seed),
-        )
-        forest.update_batch(X)
+        forest = _fit_forest(X, key, num_trees, sample_size, seed)
         out = pdf[gcols + [id_col]].copy()
         out["score"] = (
             forest.score_approximate(X, precision=approximate)
@@ -63,13 +76,10 @@ def rcf_group_scores(
         )
         if with_density:
             out["density"] = _density(forest, X)["density"]
-        return pd.DataFrame(out)
+        return out
 
-    sc = df.sparkSession.sparkContext
-    grouped = df.select(*gcols, id_col, vec_col).repartition(
-        max(sc.defaultParallelism * 2, 16), *gcols
-    )
-    return grouped.groupBy(*gcols).applyInPandas(fn, out_schema)
+    fields = "score double" + (", density double" if with_density else "")
+    return _per_group(df, gcols, gcols + [id_col, vec_col], gcols + [id_col], fields, fn)
 
 
 def rcf_group_attributions(
@@ -92,20 +102,10 @@ def rcf_group_attributions(
     RandomCutForest.java:915-936): the high+low sum still equals the
     approximate score by construction."""
     gcols = list(group_cols)
-    schema_prefix = ", ".join(f"{c} {t}" for c, t in df.select(*gcols, id_col).dtypes)
-    out_schema = (
-        f"{schema_prefix}, score double, high array<double>, low array<double>"
-    )
 
     def fn(key, pdf):
-        import pandas as pd
-
         X = np.stack(pdf[vec_col].to_numpy()).astype(np.float32)
-        forest = RCFForest(
-            X.shape[1], num_trees=num_trees, sample_size=sample_size,
-            time_decay=0.0, seed=_group_seed(tuple(key), seed),
-        )
-        forest.update_batch(X)
+        forest = _fit_forest(X, key, num_trees, sample_size, seed)
         if approximate is not None:
             hi, lo = forest.attribution_approximate(X, precision=approximate)
         else:
@@ -114,13 +114,10 @@ def rcf_group_attributions(
         out["score"] = hi.sum(1) + lo.sum(1)
         out["high"] = list(hi)
         out["low"] = list(lo)
-        return pd.DataFrame(out)
+        return out
 
-    sc = df.sparkSession.sparkContext
-    grouped = df.select(*gcols, id_col, vec_col).repartition(
-        max(sc.defaultParallelism * 2, 16), *gcols
-    )
-    return grouped.groupBy(*gcols).applyInPandas(fn, out_schema)
+    return _per_group(df, gcols, gcols + [id_col, vec_col], gcols + [id_col],
+                      "score double, high array<double>, low array<double>", fn)
 
 
 def rcf_group_forecast(
@@ -148,15 +145,8 @@ def rcf_group_forecast(
     horizon-h uncertainty accumulates. ``order_col`` may be numeric or a
     timestamp (emitted as epoch millis)."""
     gcols = list(group_cols)
-    schema_prefix = ", ".join(f"{c} {t}" for c, t in df.select(*gcols).dtypes)
-    out_schema = (
-        f"{schema_prefix}, step int, forecast double, upper double, lower double, "
-        "ts long, ts_upper long, ts_lower long"
-    )
 
     def fn(key, pdf):
-        import pandas as pd
-
         pdf = pdf.sort_values(order_col, kind="mergesort")
         v = pdf[value_col].to_numpy(np.float64)
         ov = pdf[order_col]
@@ -167,11 +157,7 @@ def rcf_group_forecast(
         rows = []
         if len(v) > shingle_size * 4:
             sh = np.lib.stride_tricks.sliding_window_view(v, shingle_size)
-            forest = RCFForest(
-                shingle_size, num_trees=num_trees, sample_size=sample_size,
-                time_decay=0.0, seed=_group_seed(tuple(key), seed),
-            )
-            forest.update_batch(sh.astype(np.float32))
+            forest = _fit_forest(sh.astype(np.float32), key, num_trees, sample_size, seed)
             fc = _extrapolate(forest, sh[-1].astype(np.float32), horizon)
             # discounted gap statistics, closed-form (Deviation.java
             # semantics: weight f^{n-1-i} per gap, f = 1 - discount)
@@ -209,11 +195,11 @@ def rcf_group_forecast(
                              "ts", "ts_upper", "ts_lower"],
         )
 
-    sc = df.sparkSession.sparkContext
-    grouped = df.select(*gcols, order_col, value_col).repartition(
-        max(sc.defaultParallelism * 2, 16), *gcols
+    return _per_group(
+        df, gcols, gcols + [order_col, value_col], gcols,
+        "step int, forecast double, upper double, lower double, "
+        "ts long, ts_upper long, ts_lower long", fn,
     )
-    return grouped.groupBy(*gcols).applyInPandas(fn, out_schema)
 
 
 def glad_group_scores(
@@ -238,12 +224,8 @@ def glad_group_scores(
     from ..core.glad import GladDetector
 
     gcols = list(group_cols)
-    schema_prefix = ", ".join(f"{c} {t}" for c, t in df.select(*gcols, id_col).dtypes)
-    out_schema = f"{schema_prefix}, score double, threshold double, grade double"
 
     def fn(key, pdf):
-        import pandas as pd
-
         if order_col is not None:
             pdf = pdf.sort_values(order_col, kind="mergesort")
         det = GladDetector(
@@ -262,11 +244,10 @@ def glad_group_scores(
         out["score"] = res["score"]
         out["threshold"] = res["threshold"]
         out["grade"] = res["grade"]
-        return pd.DataFrame(out)
+        return out
 
     cols = gcols + [id_col, vec_col]
     if order_col and order_col not in cols:
         cols.append(order_col)
-    sc = df.sparkSession.sparkContext
-    grouped = df.select(*cols).repartition(max(sc.defaultParallelism * 2, 16), *gcols)
-    return grouped.groupBy(*gcols).applyInPandas(fn, out_schema)
+    return _per_group(df, gcols, cols, gcols + [id_col],
+                      "score double, threshold double, grade double", fn)

@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from .dedup import _bucket_pairs
+
 
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     """Exact top-k per query without a single-partition-per-query window.
@@ -304,33 +306,8 @@ def cosine_lsh_candidates(
     banded = corpus.select(
         F.col(id_col).alias("_id"), F.explode(F.array(*band_structs)).alias("bb")
     )
-    buckets = (
-        banded.groupBy("bb.band", "bb.bucket")
-        .agg(F.sort_array(F.collect_list("_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .filter(F.size("ids") <= max_bucket)
-    )
-    pairs = buckets.select(
-        F.explode(
-            F.filter(
-                F.flatten(
-                    F.transform(
-                        F.col("ids"),
-                        lambda a: F.transform(
-                            F.col("ids"),
-                            lambda b: F.when(
-                                a < b, F.struct(a.alias("id_a"), b.alias("id_b"))
-                            ),
-                        ),
-                    )
-                ),
-                lambda s: s.isNotNull(),
-            )
-        ).alias("p")
-    )
-    return pairs.groupBy(
-        F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b")
-    ).agg(F.count(F.lit(1)).alias("n_shared_bands"))
+    pairs = _bucket_pairs(banded, "_id", ["bb.band", "bb.bucket"], max_bucket)
+    return pairs.groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("n_shared_bands"))
 
 
 def cosine_near_duplicates(

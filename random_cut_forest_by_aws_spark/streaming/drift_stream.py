@@ -152,12 +152,10 @@ def streaming_drift_scores(
                 extras["tlast"] = raw_last
         if sketch is not None:
             state.update((bytearray(_pack(*sketch)),))
+        if not blocks:  # nothing scored yet: the forest is still warming up
+            return
         cols = key_cols + [order_col, "score", "threshold", "grade"]
-        out = (
-            np.concatenate(blocks)
-            if blocks
-            else np.zeros((0, 4))
-        )
+        out = np.concatenate(blocks)
         pdf_out = pd.DataFrame(
             {c: [k] * len(out) for c, k in zip(key_cols, key)}
             | {

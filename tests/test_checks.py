@@ -497,7 +497,9 @@ def test_top_value_share_hand_computed(spark):
 def test_observe_matches_run(spark, docs):
     """Zero-extra-scan validation: the Observation-collected verdicts
     must equal run() field-for-field for every observable rule family,
-    with the metrics riding the caller's own action."""
+    with the metrics riding the caller's own action. The one-row
+    ``x = 5e-7`` case pins the rounding: Spark rounds the metric HALF_UP
+    on its decimal form (1e-06), not half-to-even on the binary value."""
     chk = (Check("obs")
            .is_complete("text")
            .has_completeness("lang", 0.8)
@@ -513,21 +515,26 @@ def test_observe_matches_run(spark, docs):
            .has_correlation("doc_id", "n_chars", at_least=-1.0)
            .has_quantile("n_chars", 0.5, at_least=0.0)
            .has_approx_count_distinct("doc_id", at_least=1.0))
-    inst, obs = chk.observe(docs)
-    assert inst.count() == docs.count()  # the caller's own action
-    got = chk.verdicts_from_metrics(obs.get)
-    exp = [r.asDict() for r in chk.run(docs).collect()]
-    assert len(got) == len(exp)
-    for g, e in zip(got, exp):
-        assert g["constraint"] == e["constraint"]
-        assert g["passed"] == e["passed"], g["constraint"]
-        if e["metric"] is None:
-            assert g["metric"] is None, g["constraint"]
-        else:
-            assert g["metric"] == pytest.approx(e["metric"], abs=1e-9), \
-                g["constraint"]
-        assert g["n_rows"] == e["n_rows"]
-        assert g["n_violations"] == e["n_violations"]
+    half = (Check("half")
+            .has_min("x", at_least=0.0)
+            .has_max("x", at_most=1.0))
+    tiny = spark.createDataFrame([(5e-7,)], "x double")
+    for chk, df in ((chk, docs), (half, tiny)):
+        inst, obs = chk.observe(df)
+        assert inst.count() == df.count()  # the caller's own action
+        got = chk.verdicts_from_metrics(obs.get)
+        exp = [r.asDict() for r in chk.run(df).collect()]
+        assert len(got) == len(exp)
+        for g, e in zip(got, exp):
+            assert g["constraint"] == e["constraint"]
+            assert g["passed"] == e["passed"], g["constraint"]
+            if e["metric"] is None:
+                assert g["metric"] is None, g["constraint"]
+            else:
+                assert g["metric"] == pytest.approx(e["metric"], abs=1e-9), \
+                    g["constraint"]
+            assert g["n_rows"] == e["n_rows"]
+            assert g["n_violations"] == e["n_violations"]
 
 
 def test_observe_rejects_distinct_and_grouping_rules(spark, docs):

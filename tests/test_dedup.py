@@ -267,6 +267,43 @@ def test_winnow_candidates_planted_and_bucket_guard(spark):
     assert len(guarded) == 0
 
 
+@pytest.mark.parametrize("gen", ["minhash", "simhash", "winnow", "cosine_lsh"])
+def test_mega_bucket_guard_every_generator(spark, gen):
+    """n identical docs (or vectors) share every bucket, so a generator
+    whose guard is max_bucket returns all n·(n−1)/2 pairs at
+    n = max_bucket and none at n = max_bucket + 1."""
+    from random_cut_forest_by_aws_spark.operators.dedup import (
+        DEFAULT_MAX_BUCKET,
+        winnow_candidates,
+    )
+    from random_cut_forest_by_aws_spark.operators.similarity import cosine_lsh_candidates
+
+    max_bucket = DEFAULT_MAX_BUCKET if gen in ("minhash", "simhash") else 4
+
+    def pairs(n):
+        if gen == "cosine_lsh":
+            vecs = spark.createDataFrame(
+                [(i, [0.6, -0.8, 0.1]) for i in range(n)],
+                "vec_id long, embedding array<double>",
+            )
+            out = cosine_lsh_candidates(vecs, 3, bits=4, bands=2, max_bucket=max_bucket)
+        else:
+            docs = spark.createDataFrame(
+                [(i, "the same boilerplate text in every document") for i in range(n)],
+                "doc_id long, text string",
+            )
+            out = {
+                "minhash": lambda: minhash_candidates(docs),
+                "simhash": lambda: simhash_candidates(simhash(docs)),
+                "winnow": lambda: winnow_candidates(docs, max_bucket=max_bucket),
+            }[gen]()
+        return sorted((r.id_a, r.id_b) for r in out.collect())
+
+    assert pairs(max_bucket + 1) == []
+    n = max_bucket
+    assert pairs(n) == [(a, b) for a in range(n) for b in range(a + 1, n)]
+
+
 def _py_portable_simhash(text: str, seed: int = 42) -> int:
     """Scalar replay of simhash(portable=True)'s exact arithmetic."""
     def roll(tok, base, mod, init):

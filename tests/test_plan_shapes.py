@@ -217,12 +217,15 @@ def test_suite_verdicts_read_no_python_rdd(spark, seqs):
         assert leaves and set(leaves) == {"LocalTableScan"}, plan
 
 
-def _settled_jobs(spark) -> int:
-    """Jobs run so far outside any job group, once the listener bus has
-    caught up (job events reach the status tracker asynchronously)."""
+def _settled_jobs(spark) -> set[int]:
+    """Ids of the jobs run so far outside any job group, once the listener
+    bus has caught up (job events reach the status tracker
+    asynchronously). Compare id sets, not counts: past
+    ``spark.ui.retainedJobs`` (1,000) the tracker evicts the oldest 100
+    jobs, so a count can shrink while jobs run."""
     sc = spark.sparkContext
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(None))
+    return set(sc.statusTracker().getJobIdsForGroup(None))
 
 
 def test_suite_run_leaves_no_cache_and_bounded_jobs(spark, seqs):
@@ -238,6 +241,6 @@ def test_suite_run_leaves_no_cache_and_bounded_jobs(spark, seqs):
     res = _suite_run(spark, seqs)
     res.verdicts.collect()
     res.violations.collect()
-    jobs = _settled_jobs(spark) - j0
+    jobs = len(_settled_jobs(spark) - j0)
     assert cache_manager.cachedData().size() == n_cached
     assert 0 < jobs <= 21, jobs
