@@ -924,27 +924,23 @@ def _load():
         u64p, u64p, u64p, u64p,
         f64p, i64p, f64p, f64p, ctypes.c_double,
     ]
-    lib.rcf_score_lanes.restype = None
-    lib.rcf_score_lanes.argtypes = [
+    # (L, N, d, the eight flat forest arrays, root, X32, qs, ts): the
+    # argument prefix every lane walk shares (_lane_args)
+    lane = [
         ctypes.c_int64, ctypes.c_int, ctypes.c_int,
         i32p, f32p, i32p, i32p, i32p, f32p, f32p, i32p,
         i32p, f32p, i64p, i64p,
+    ]
+    lib.rcf_score_lanes.restype = None
+    lib.rcf_score_lanes.argtypes = lane + [
         f64p, f64p, f64p, ctypes.c_double, f64p,
     ]
     lib.rcf_attribution_lanes.restype = None
-    lib.rcf_attribution_lanes.argtypes = [
-        ctypes.c_int64, ctypes.c_int, ctypes.c_int,
-        i32p, f32p, i32p, i32p, i32p, f32p, f32p, i32p,
-        i32p, f32p, i64p, i64p,
+    lib.rcf_attribution_lanes.argtypes = lane + [
         f64p, f64p, f64p, ctypes.c_double, f64p, f64p,
     ]
     lib.rcf_density_lanes.restype = None
-    lib.rcf_density_lanes.argtypes = [
-        ctypes.c_int64, ctypes.c_int, ctypes.c_int,
-        i32p, f32p, i32p, i32p, i32p, f32p, f32p, i32p,
-        i32p, f32p, i64p, i64p,
-        f64p, f64p, f64p, f64p, f64p, f64p,
-    ]
+    lib.rcf_density_lanes.argtypes = lane + [f64p] * 6
     lib.pcg_selftest.restype = None
     lib.pcg_selftest.argtypes = [
         ctypes.c_uint64, ctypes.c_uint64, ctypes.c_uint64, ctypes.c_uint64,
@@ -990,31 +986,40 @@ def _log2tab(K: int) -> np.ndarray:
     return tab
 
 
+def _lane_args(forest, X32: np.ndarray, qs: np.ndarray, ts: np.ndarray,
+               flats: tuple) -> tuple:
+    """The argument prefix shared by the three lane walks: lane count,
+    forest shape, the eight flat arrays (``RCFForest._flat`` order), the
+    roots, the queries and the lanes' (query, tree) indices."""
+    cutdim, cutval, left, right, parent, bbmin, bbmax, mass = flats
+    c = ctypes
+    return (
+        len(qs), forest.N, forest.d,
+        _ptr(cutdim, c.c_int32), _ptr(cutval, c.c_float),
+        _ptr(left, c.c_int32), _ptr(right, c.c_int32),
+        _ptr(parent, c.c_int32),
+        _ptr(bbmin, c.c_float), _ptr(bbmax, c.c_float),
+        _ptr(mass, c.c_int32), _ptr(forest.root, c.c_int32),
+        _ptr(X32, c.c_float),
+        _ptr(np.ascontiguousarray(qs, np.int64), c.c_int64),
+        _ptr(np.ascontiguousarray(ts, np.int64), c.c_int64),
+    )
+
+
 def score_lanes_c(forest, X32: np.ndarray, qs: np.ndarray, ts: np.ndarray,
                   flats: tuple, tm_all: np.ndarray) -> np.ndarray:
     """Default-kernel `_score_lanes` through the C walk; returns the
     normalized per-(query, tree) score vector, bit-identical to the
     vectorized Python path (tests/test_ckernel_parity.py)."""
-    cutdim, cutval, left, right, parent, bbmin, bbmax, mass = flats
-    f = forest
-    L = len(qs)
-    out = np.empty(L)
-    if L == 0:
+    bbmin, bbmax = flats[5], flats[6]
+    out = np.empty(len(qs))
+    if len(qs) == 0:
         return out
     rsum = (bbmax - bbmin).sum(1, dtype=np.float64)
-    tab = _log2tab(f.K)
     c = ctypes
     _LIB.rcf_score_lanes(
-        L, f.N, f.d,
-        _ptr(cutdim, c.c_int32), _ptr(cutval, c.c_float),
-        _ptr(left, c.c_int32), _ptr(right, c.c_int32),
-        _ptr(parent, c.c_int32),
-        _ptr(bbmin, c.c_float), _ptr(bbmax, c.c_float),
-        _ptr(mass, c.c_int32), _ptr(f.root, c.c_int32),
-        _ptr(X32, c.c_float),
-        _ptr(np.ascontiguousarray(qs, np.int64), c.c_int64),
-        _ptr(np.ascontiguousarray(ts, np.int64), c.c_int64),
-        _ptr(rsum, c.c_double), _ptr(tab, c.c_double),
+        *_lane_args(forest, X32, qs, ts, flats),
+        _ptr(rsum, c.c_double), _ptr(_log2tab(forest.K), c.c_double),
         _ptr(np.ascontiguousarray(tm_all, np.float64), c.c_double),
         float(np.finfo(np.float32).tiny), _ptr(out, c.c_double),
     )
@@ -1029,28 +1034,16 @@ def attribution_lanes_c(
     (hi_out[Q,d], lo_out[Q,d]) accumulated over the lane set, BEFORE the
     per-row division (1/T or per-row accepted counts) — bit-identical to
     the vectorized Python path (tests/test_ckernel_parity.py)."""
-    cutdim, cutval, left, right, parent, bbmin, bbmax, mass = flats
-    f = forest
-    d = f.d
-    hi_out = np.zeros((Q, d))
-    lo_out = np.zeros((Q, d))
-    L = len(qs)
-    if L == 0:
+    bbmin, bbmax = flats[5], flats[6]
+    hi_out = np.zeros((Q, forest.d))
+    lo_out = np.zeros((Q, forest.d))
+    if len(qs) == 0:
         return hi_out, lo_out
     rsum = (bbmax - bbmin).sum(1, dtype=np.float64)
-    tab = _log2tab(f.K)
     c = ctypes
     _LIB.rcf_attribution_lanes(
-        L, f.N, d,
-        _ptr(cutdim, c.c_int32), _ptr(cutval, c.c_float),
-        _ptr(left, c.c_int32), _ptr(right, c.c_int32),
-        _ptr(parent, c.c_int32),
-        _ptr(bbmin, c.c_float), _ptr(bbmax, c.c_float),
-        _ptr(mass, c.c_int32), _ptr(f.root, c.c_int32),
-        _ptr(X32, c.c_float),
-        _ptr(np.ascontiguousarray(qs, np.int64), c.c_int64),
-        _ptr(np.ascontiguousarray(ts, np.int64), c.c_int64),
-        _ptr(rsum, c.c_double), _ptr(tab, c.c_double),
+        *_lane_args(forest, X32, qs, ts, flats),
+        _ptr(rsum, c.c_double), _ptr(_log2tab(forest.K), c.c_double),
         _ptr(np.ascontiguousarray(tm_all, np.float64), c.c_double),
         float(np.finfo(np.float32).tiny),
         _ptr(hi_out, c.c_double), _ptr(lo_out, c.c_double),
@@ -1066,31 +1059,16 @@ def density_lanes_c(
     accumulator arrays (prob/meas/dist × high/low) BEFORE the 1/T
     division — bit-identical to the vectorized Python walk in
     core/queries.density."""
-    cutdim, cutval, left, right, parent, bbmin, bbmax, mass = flats
-    f = forest
-    d = f.d
     out = {
-        k: np.zeros((Q, d))
+        k: np.zeros((Q, forest.d))
         for k in ("prob_high", "prob_low", "meas_high", "meas_low",
                   "dist_high", "dist_low")
     }
-    L = len(qs)
-    if L == 0:
+    if len(qs) == 0:
         return out
-    c = ctypes
     _LIB.rcf_density_lanes(
-        L, f.N, d,
-        _ptr(cutdim, c.c_int32), _ptr(cutval, c.c_float),
-        _ptr(left, c.c_int32), _ptr(right, c.c_int32),
-        _ptr(parent, c.c_int32),
-        _ptr(bbmin, c.c_float), _ptr(bbmax, c.c_float),
-        _ptr(mass, c.c_int32), _ptr(f.root, c.c_int32),
-        _ptr(X32, c.c_float),
-        _ptr(np.ascontiguousarray(qs, np.int64), c.c_int64),
-        _ptr(np.ascontiguousarray(ts, np.int64), c.c_int64),
-        _ptr(out["prob_high"], c.c_double), _ptr(out["prob_low"], c.c_double),
-        _ptr(out["meas_high"], c.c_double), _ptr(out["meas_low"], c.c_double),
-        _ptr(out["dist_high"], c.c_double), _ptr(out["dist_low"], c.c_double),
+        *_lane_args(forest, X32, qs, ts, flats),
+        *(_ptr(out[k], ctypes.c_double) for k in out),
     )
     return out
 

@@ -11,7 +11,10 @@ Execution model (performance-critical):
 * **scoring** is vectorized with active-lane compaction: every
   (query, tree) pair is a lane; descent and the leaf-to-root walk operate
   on flat index arrays that shrink as lanes finish, so total work is
-  Σ path-lengths, not max-depth × lanes;
+  Σ path-lengths, not max-depth × lanes. Every query builds its lanes
+  with ``_lanes`` and walks them to their leaves with ``_descend``; the
+  queries differ only in their leaf and leaf-to-root formulas (the
+  reference's visitors, ``RandomCutForest.java:663-761``);
 * **updates** loop only over *accepted* reservoir events (O(k·log n) per
   tree, not O(n)); the optional C kernel (``core/ckernel.py``) does the
   per-event tree surgery directly on the canonical arrays. The pure-Python
@@ -408,6 +411,22 @@ class _TreeOps:
             a = parent[a]
 
 
+# default (score_seen, score_unseen, damp, normalizer) kernels — the
+# standard formulas, CommonUtils.java:148-181
+_DEFAULT_KERNELS = (
+    lambda dep, m: 1.0 / (dep + np.log2(m + 1.0)),
+    lambda dep, m: 1.0 / (dep + 1.0),
+    lambda lm, tm: 1.0 - lm / (2.0 * np.maximum(tm, 1.0)),
+    lambda s, tm: s * np.log2(tm + 1.0),
+)
+
+
+def _kernels(score_seen, score_unseen, damp, normalizer) -> tuple:
+    """The four query kernels, each one left None replaced by its default."""
+    given = (score_seen, score_unseen, damp, normalizer)
+    return tuple(d if k is None else k for k, d in zip(given, _DEFAULT_KERNELS))
+
+
 class RCFForest:
     """Random Cut Forest over float32 points, flat-array state.
 
@@ -629,33 +648,63 @@ class RCFForest:
             self.mass.reshape(T * N),
         )
 
+    def _lanes(self, Q: int):
+        """Every (query, live tree) pair of Q queries as one lane:
+        ``(live trees, qs, ts, tm_all)`` with ``qs[i]`` the query row and
+        ``ts[i]`` the tree of lane i (query-major), and ``tm_all[T]`` each
+        tree's root mass (0 for an empty tree)."""
+        live = np.nonzero(self.root >= 0)[0]
+        qs = np.repeat(np.arange(Q, dtype=np.int64), len(live))
+        ts = np.tile(live.astype(np.int64), Q)
+        tm_all = np.zeros(self.T)
+        tm_all[live] = self.mass.reshape(-1)[live * self.N + self.root[live]]
+        return live, qs, ts, tm_all
+
+    def _descend(self, X32: np.ndarray, qs: np.ndarray, ts: np.ndarray,
+                 flats: tuple) -> tuple[np.ndarray, np.ndarray]:
+        """Root-to-leaf descent of every lane: ``(leaf address, depth)``.
+
+        The one Python descent under every query (the C walks in
+        core/ckernel.py mirror it): a lane goes right iff
+        ``x[cutdim] > cutval``, so a NaN coordinate goes left. Per level,
+        the arrays are sliced from that level's gathers rather than
+        gathered again, and the children are packed pairwise so one
+        gather picks the next node."""
+        cutdim, cutval, left, right = flats[:4]
+        base = ts * self.N
+        addr = base + self.root[ts].astype(np.int64)
+        depth = np.zeros(len(qs), np.int64)
+        lr = np.stack([left, right], axis=1)
+        active = np.arange(len(qs))
+        a = addr
+        cd = cutdim[a]
+        while len(active):
+            keep = cd >= 0
+            stepping = active[keep]
+            if len(stepping):
+                a2 = a[keep]
+                xv = X32[qs[stepping], cd[keep].astype(np.int64)]
+                child = lr[a2, (xv > cutval[a2]).astype(np.int8)].astype(np.int64)
+                a = base[stepping] + child
+                addr[stepping] = a
+                depth[stepping] += 1
+                cd = cutdim[a]
+            active = stepping
+        return addr, depth
+
     def leaf_points(self, X: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """Vectorized root-to-leaf descent for every (query, live tree):
         returns (leaf points [Q, L, d], leaf masses [Q, L]) — the raw
         material for nearest-exemplar lookups (near-neighbor style)."""
         X32 = np.ascontiguousarray(np.atleast_2d(X), np.float32)
-        Q, T, N, d = X32.shape[0], self.T, self.N, self.d
-        live = np.nonzero(self.root >= 0)[0]
-        L = len(live)
-        if Q == 0 or L == 0:
+        Q, d = X32.shape[0], self.d
+        live, qs, ts, _ = self._lanes(Q)
+        if not len(qs):
             return np.zeros((Q, 0, d), np.float32), np.zeros((Q, 0), np.int64)
-        cutdim, cutval, left, right, parent, bbmin, bbmax, mass = self._flat()
-        qs = np.repeat(np.arange(Q, dtype=np.int64), L)
-        ts = np.tile(live.astype(np.int64), Q)
-        addr = ts * N + self.root[ts].astype(np.int64)
-        active = np.arange(Q * L)
-        while len(active):
-            a = addr[active]
-            at_leaf = cutdim[a] < 0
-            stepping = active[~at_leaf]
-            if len(stepping):
-                a2 = addr[stepping]
-                cd2 = cutdim[a2].astype(np.int64)
-                xv = X32[qs[stepping], cd2]
-                goleft = xv <= cutval[a2]
-                child = np.where(goleft, left[a2], right[a2]).astype(np.int64)
-                addr[stepping] = ts[stepping] * N + child
-            active = stepping
+        flats = self._flat()
+        bbmin, mass = flats[5], flats[7]
+        addr, _ = self._descend(X32, qs, ts, flats)
+        L = len(live)
         return (
             bbmin[addr].reshape(Q, L, d),
             mass[addr].reshape(Q, L).astype(np.int64),
@@ -687,24 +736,16 @@ class RCFForest:
         (CommonUtils.java:148-181).
         """
         X32 = np.ascontiguousarray(np.atleast_2d(X), np.float32)
-        Q, T, N = X32.shape[0], self.T, self.N
-        out = np.zeros(Q)
-        live_trees = np.nonzero(self.root >= 0)[0]
-        if Q == 0 or len(live_trees) == 0:
+        out = np.zeros(X32.shape[0])
+        _, qs, ts, tm_all = self._lanes(len(X32))
+        if not len(qs):
             return out
-        flats = self._flat()
-        mass = flats[7]
-        tm_all = np.zeros(T)
-        tm_all[live_trees] = mass[live_trees * N + self.root[live_trees]]
-
-        qs = np.repeat(np.arange(Q, dtype=np.int64), len(live_trees))
-        ts = np.tile(live_trees.astype(np.int64), Q)
         lane_scores = self._score_lanes(
-            X32, qs, ts, flats, tm_all, score_seen, score_unseen, damp,
+            X32, qs, ts, self._flat(), tm_all, score_seen, score_unseen, damp,
             normalizer,
         )
         np.add.at(out, qs, lane_scores)
-        return out / T
+        return out / self.T
 
     def _score_lanes(
         self,
@@ -729,49 +770,15 @@ class RCFForest:
                 # C walk (core/ckernel.py): bit-identical to the
                 # vectorized path below for the default kernels
                 return ck.score_lanes_c(self, X32, qs, ts, flats, tm_all)
-        cutdim, cutval, left, right, parent, bbmin, bbmax, mass = flats
+        parent, bbmin, bbmax, mass = flats[4:]
         N = self.N
-
-        L = len(qs)
-        addr = ts * N + self.root[ts].astype(np.int64)
-        depth = np.zeros(L, np.int64)
-        score = np.zeros(L)
-        frozen = np.zeros(L, bool)
-
-        # --- descent (arrays sliced from the level's gathers, not
-        # re-gathered; children packed pairwise for one gather) ----------
-        lr = np.stack([left, right], axis=1)
-        base_off = ts * N
-        active = np.arange(L)
-        a = addr[active]
-        cd = cutdim[a]
-        while len(active):
-            at_leaf = cd < 0
-            keep = ~at_leaf
-            stepping = active[keep]
-            if len(stepping):
-                a2 = a[keep]
-                cd2 = cd[keep].astype(np.int64)
-                xv = X32[qs[stepping], cd2]
-                child = lr[a2, (xv > cutval[a2]).astype(np.int8)].astype(np.int64)
-                a = base_off[stepping] + child
-                addr[stepping] = a
-                depth[stepping] += 1
-                cd = cutdim[a]
-            active = stepping
-
+        a, depth = self._descend(X32, qs, ts, flats)
         default_unseen = score_unseen is None
-        if score_seen is None:
-            score_seen = lambda dep, m: 1.0 / (dep + np.log2(m + 1.0))  # noqa: E731
-        if score_unseen is None:
-            score_unseen = lambda dep, m: 1.0 / (dep + 1.0)  # noqa: E731
-        if damp is None:
-            damp = lambda lm_, tm_: 1.0 - lm_ / (2.0 * np.maximum(tm_, 1.0))  # noqa: E731
-        if normalizer is None:
-            normalizer = lambda s, tm_: s * np.log2(tm_ + 1.0)  # noqa: E731
+        score_seen, score_unseen, damp, normalizer = _kernels(
+            score_seen, score_unseen, damp, normalizer
+        )
 
         # --- leaf scores --------------------------------------------------
-        a = addr
         leafpt = bbmin[a]
         eq = np.all(X32[qs] == leafpt, axis=1)
         lm = mass[a].astype(np.float64)
@@ -850,15 +857,14 @@ class RCFForest:
         must reproduce ``score`` exactly (the equivalence test).
         """
         X32 = np.ascontiguousarray(np.atleast_2d(X), np.float32)
-        Q, T, N = X32.shape[0], self.T, self.N
-        live = np.nonzero(self.root >= 0)[0]
+        Q = X32.shape[0]
+        # lanes are built per tree block below: only the live trees and
+        # the root masses are taken here
+        live, _, _, tm_all = self._lanes(0)
         if Q == 0 or len(live) == 0:
             z = np.zeros(Q)
             return (z, np.zeros(Q, np.int64)) if return_accepted else z
         flats = self._flat()
-        mass = flats[7]
-        tm_all = np.zeros(T)
-        tm_all[live] = mass[live * N + self.root[live]]
 
         t_live = len(live)
         threshold = (
@@ -937,44 +943,16 @@ class RCFForest:
         X32 = np.ascontiguousarray(np.atleast_2d(X), np.float32)
         Q, T, N = X32.shape[0], self.T, self.N
         out = np.zeros(Q)
-        live_trees = np.nonzero(self.root >= 0)[0]
-        if Q == 0 or len(live_trees) == 0:
+        _, qs, ts, tm_all = self._lanes(Q)
+        if not len(qs):
             return out
-        cutdim, cutval, left, right, parent, bbmin, bbmax, mass = self._flat()
-        tm_all = np.zeros(T)
-        tm_all[live_trees] = mass[live_trees * N + self.root[live_trees]]
+        flats = self._flat()
+        cutdim, _, _, _, parent, bbmin, bbmax, mass = flats
+        a, depth = self._descend(X32, qs, ts, flats)
+        score_seen, score_unseen, damp, normalizer = _kernels(
+            score_seen, score_unseen, damp, normalizer
+        )
 
-        L = Q * len(live_trees)
-        qs = np.repeat(np.arange(Q, dtype=np.int64), len(live_trees))
-        ts = np.tile(live_trees.astype(np.int64), Q)
-        addr = ts * N + self.root[ts].astype(np.int64)
-        depth = np.zeros(L, np.int64)
-
-        active = np.arange(L)
-        while len(active):
-            a = addr[active]
-            at_leaf = cutdim[a] < 0
-            stepping = active[~at_leaf]
-            if len(stepping):
-                a2 = addr[stepping]
-                cd2 = cutdim[a2].astype(np.int64)
-                xv = X32[qs[stepping], cd2]
-                goleft = xv <= cutval[a2]
-                child = np.where(goleft, left[a2], right[a2]).astype(np.int64)
-                addr[stepping] = ts[stepping] * N + child
-                depth[stepping] += 1
-            active = stepping
-
-        if score_seen is None:
-            score_seen = lambda dep, m: 1.0 / (dep + np.log2(m + 1.0))  # noqa: E731
-        if score_unseen is None:
-            score_unseen = lambda dep, m: 1.0 / (dep + 1.0)  # noqa: E731
-        if damp is None:
-            damp = lambda lm_, tm_: 1.0 - lm_ / (2.0 * np.maximum(tm_, 1.0))  # noqa: E731
-        if normalizer is None:
-            normalizer = lambda s, tm_: s * np.log2(tm_ + 1.0)  # noqa: E731
-
-        a = addr
         leafpt = bbmin[a]
         eq = np.all(X32[qs] == leafpt, axis=1)
         lm = mass[a].astype(np.float64)
@@ -1077,64 +1055,34 @@ class RCFForest:
             score_seen is None and score_unseen is None
             and damp is None and normalizer is None
         )
-        if score_seen is None:
-            score_seen = lambda dep, m: 1.0 / (dep + np.log2(m + 1.0))  # noqa: E731
-        if score_unseen is None:
-            score_unseen = lambda dep, m: 1.0 / (dep + 1.0)  # noqa: E731
-        if damp is None:
-            damp = lambda lm_, tm_: 1.0 - lm_ / (2.0 * np.maximum(tm_, 1.0))  # noqa: E731
-        if normalizer is None:
-            normalizer = lambda s, tm_: s * np.log2(tm_ + 1.0)  # noqa: E731
+        score_seen, score_unseen, damp, normalizer = _kernels(
+            score_seen, score_unseen, damp, normalizer
+        )
         X32 = np.ascontiguousarray(np.atleast_2d(X), np.float32)
         Q, T, N, d = X32.shape[0], self.T, self.N, self.d
         hi_out = np.zeros((Q, d))
         lo_out = np.zeros((Q, d))
-        live_trees = np.nonzero(self.root >= 0)[0]
-        if Q == 0 or len(live_trees) == 0:
+        # explicit lanes replace the full set, so none is built for them
+        live, qs, ts, tm_all = self._lanes(Q if _lanes is None else 0)
+        if Q == 0 or len(live) == 0:
             return hi_out, lo_out
-        cutdim, cutval, left, right, parent, bbmin, bbmax, mass = self._flat()
-        tm_all = np.zeros(T)
-        tm_all[live_trees] = mass[live_trees * N + self.root[live_trees]]
-        log_tm = np.log2(tm_all + 1.0)
-
-        if _lanes is None:
-            qs = np.repeat(np.arange(Q, dtype=np.int64), len(live_trees))
-            ts = np.tile(live_trees.astype(np.int64), Q)
-        else:
+        if _lanes is not None:
             qs, ts = _lanes
+        div = T if _per_row_div is None else (
+            np.maximum(_per_row_div, 1).astype(np.float64)[:, None]
+        )
+        flats = self._flat()
+        cutdim, cutval, left, right, parent, bbmin, bbmax, mass = flats
         if use_default:
             ck = _ckernel()
             if ck is not None:
                 # C walk (core/ckernel.py): bit-identical to the
                 # vectorized path below for the default kernels
                 hi_out, lo_out = ck.attribution_lanes_c(
-                    self, X32, qs, ts,
-                    (cutdim, cutval, left, right, parent, bbmin, bbmax,
-                     mass),
-                    tm_all, Q,
+                    self, X32, qs, ts, flats, tm_all, Q
                 )
-                if _per_row_div is not None:
-                    div = np.maximum(_per_row_div, 1).astype(np.float64)[:, None]
-                    return hi_out / div, lo_out / div
-                return hi_out / T, lo_out / T
-        L = len(qs)
-        addr = ts * N + self.root[ts].astype(np.int64)
-        depth = np.zeros(L, np.int64)
-
-        active = np.arange(L)
-        while len(active):
-            a = addr[active]
-            at_leaf = cutdim[a] < 0
-            stepping = active[~at_leaf]
-            if len(stepping):
-                a2 = addr[stepping]
-                cd2 = cutdim[a2].astype(np.int64)
-                xv = X32[qs[stepping], cd2]
-                goleft = xv <= cutval[a2]
-                child = np.where(goleft, left[a2], right[a2]).astype(np.int64)
-                addr[stepping] = ts[stepping] * N + child
-                depth[stepping] += 1
-            active = stepping
+                return hi_out / div, lo_out / div
+        addr, depth = self._descend(X32, qs, ts, flats)
 
         a = addr
         leafpt = bbmin[a]
@@ -1247,10 +1195,7 @@ class RCFForest:
         tmv_all = tm_all[ts]
         np.add.at(hi_out, qs, normalizer(high, tmv_all[:, None]))
         np.add.at(lo_out, qs, normalizer(low, tmv_all[:, None]))
-        if _per_row_div is not None:
-            div = np.maximum(_per_row_div, 1).astype(np.float64)[:, None]
-            return hi_out / div, lo_out / div
-        return hi_out / T, lo_out / T
+        return hi_out / div, lo_out / div
 
     def attribution_approximate(
         self,

@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .forest import RCFForest, _NULL
+from .forest import RCFForest, _NULL, _ckernel
 
 
 # --------------------------------------------------------------------- #
@@ -49,48 +49,24 @@ def density(forest: RCFForest, X: np.ndarray, q_scale: float = 2.0) -> dict:
         "meas_high": np.zeros((Q, d)), "meas_low": np.zeros((Q, d)),
         "dist_high": np.zeros((Q, d)), "dist_low": np.zeros((Q, d)),
     }
-    live = np.nonzero(forest.root >= 0)[0]
-    if Q == 0 or len(live) == 0:
+    _, qs, ts, _ = forest._lanes(Q)
+    if not len(qs):
         res["density"] = np.zeros(Q)
         return res
-    cutdim, cutval, left, right, parent, bbmin, bbmax, mass = forest._flat()
-
-    L = Q * len(live)
-    qs = np.repeat(np.arange(Q, dtype=np.int64), len(live))
-    ts = np.tile(live.astype(np.int64), Q)
-
-    from .forest import _ckernel
-
+    flats = forest._flat()
+    _, _, _, _, parent, bbmin, bbmax, mass = flats
     ck = _ckernel()
     if ck is not None:
         # C walk (core/ckernel.py rcf_density_lanes): bit-identical to
         # the vectorized path below
-        acc = ck.density_lanes_c(
-            forest, X32, qs, ts,
-            (cutdim, cutval, left, right, parent, bbmin, bbmax, mass), Q,
-        )
+        acc = ck.density_lanes_c(forest, X32, qs, ts, flats, Q)
         for k in res:
             res[k] = acc[k] / T
         return _density_scalar(res, forest, d, q_scale)
-    addr = ts * N + forest.root[ts].astype(np.int64)
-
-    # descent
-    active = np.arange(L)
-    while len(active):
-        a = addr[active]
-        at_leaf = cutdim[a] < 0
-        stepping = active[~at_leaf]
-        if len(stepping):
-            a2 = addr[stepping]
-            cd2 = cutdim[a2].astype(np.int64)
-            xv = X32[qs[stepping], cd2]
-            goleft = xv <= cutval[a2]
-            child = np.where(goleft, left[a2], right[a2]).astype(np.int64)
-            addr[stepping] = ts[stepping] * N + child
-        active = stepping
+    a, _ = forest._descend(X32, qs, ts, flats)
+    L = len(qs)
 
     # leaf phase (SimpleInterpolationVisitor.acceptLeaf:139-168)
-    a = addr
     Xl = X32[qs].astype(np.float64)
     leafpt = bbmin[a]
     maxgap = np.maximum(Xl - leafpt, 0)  # large.max - small.max

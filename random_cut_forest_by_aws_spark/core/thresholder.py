@@ -15,6 +15,12 @@ our drift operator uses (shingleSize 1, TransformMethod NONE/NORMALIZE):
 * update feeds min(score, 2.0) into the primary deviation and the
   below-mean gap into the threshold deviation
   (``BasicThresholder.java:308-330``).
+
+Both batch paths (``process_batch``, ``primary_process_batch``) run the
+same block update, ``BasicThresholder._advance``: the three Deviation
+recurrences in closed form per block (``_prefix``, ``_mean_dev``), blocks
+capped by ``_blocks``; each path keeps only its threshold and grade
+formulas.
 """
 
 from __future__ import annotations
@@ -72,6 +78,30 @@ class Deviation:
         d = cls(float(s[0]))
         d.weight, d.sum, d.sum_squared, d.count = float(s[1]), float(s[2]), float(s[3]), int(s[4])
         return d
+
+
+def _prefix(x: np.ndarray, s0: float, f: float):
+    """One Deviation accumulator ``s' = s·f + x`` over a block, in closed
+    form ``s_i = f^i·s0 + Σ_{j<i} x_j·f^{i−1−j}``: the state before each
+    row and the end state. Exponents stay bounded by the block length
+    (``BasicThresholder._blocks``)."""
+    n = len(x)
+    if f == 1.0:
+        c = np.concatenate([[0.0], np.cumsum(x)])
+        return s0 + c[:-1], s0 + c[-1]
+    inv = f ** (-np.arange(n, dtype=np.float64))
+    c = np.concatenate([[0.0], np.cumsum(x * inv)])
+    fi = f ** np.arange(n + 1, dtype=np.float64)
+    return fi[:n] * s0 + (fi[:n] / f) * c[:-1], fi[n] * s0 + (fi[n] / f) * c[-1]
+
+
+def _mean_dev(sums: np.ndarray, ssqs: np.ndarray, weights: np.ndarray):
+    """Vectorized ``Deviation.mean`` / ``Deviation.deviation``."""
+    pos = weights > 0
+    w = np.where(pos, weights, 1.0)
+    mean = np.where(pos, sums / w, 0.0)
+    var = np.maximum(np.where(pos, ssqs / w, 0.0) - mean * mean, 0.0)
+    return mean, np.sqrt(var)
 
 
 class BasicThresholder:
@@ -191,6 +221,65 @@ class BasicThresholder:
         return out
 
     # -- vectorized threshold-then-update over a score sequence -----------
+    def _blocks(self, n: int, block: int) -> list[slice]:
+        """Row blocks of at most ``block`` rows, capped so the prefix
+        factors f^{-j} stay below 1e12 — with a large discount a fixed 256
+        block would overflow/cancel (f=0.8 ⇒ f^-255 ≈ 6e24)."""
+        fmin = min(1.0 - self.primary.discount, 1.0 - self.threshold_dev.discount)
+        if fmin < 1.0:
+            block = max(1, min(block, int(27.6 / -math.log(fmin))))
+        return [slice(lo, lo + block) for lo in range(0, n, block)]
+
+    def _advance(self, s: np.ndarray, prim: np.ndarray, sec: np.ndarray):
+        """Feed one block to the three deviations — ``prim`` to
+        ``primary``, ``sec`` to ``secondary``, each positive gap
+        ``primary.mean − prim`` to ``threshold_dev`` — and commit the
+        block's end state (``s[-1]`` becomes ``last_score``). Returns,
+        as of BEFORE each row, (primary mean, primary dev, threshold dev,
+        deviation ready, count)."""
+        n = len(s)
+        f1 = 1.0 - self.primary.discount
+        f2 = 1.0 - self.threshold_dev.discount
+        pr, se, td = self.primary, self.secondary, self.threshold_dev
+        p_sum, p_sum_end = _prefix(prim, pr.sum, f1)
+        p_ssq, p_ssq_end = _prefix(prim * prim, pr.sum_squared, f1)
+        p_w, p_w_end = _prefix(np.ones(n), pr.weight, f1)
+        p_mean, p_dev = _mean_dev(p_sum, p_ssq, p_w)
+        s_sum_end = _prefix(sec, se.sum, f1)[1]
+        s_ssq_end = _prefix(sec * sec, se.sum_squared, f1)[1]
+        s_w_end = _prefix(np.ones(n), se.weight, f1)[1]
+
+        # threshold deviation: updated only on positive below-mean gaps,
+        # so row i sees the state after the events before it
+        gaps = p_mean - prim
+        ev = gaps > 0
+        c_excl = np.concatenate([[0], np.cumsum(ev)])[:-1]
+        ev_vals = gaps[ev]
+        ne = len(ev_vals)
+        t_sum = np.append(*_prefix(ev_vals, td.sum, f2))
+        t_ssq = np.append(*_prefix(ev_vals * ev_vals, td.sum_squared, f2))
+        # the weight keeps its own closed form: a _prefix over ones rounds
+        # differently, and the end state is checkpointed
+        ke = np.arange(ne + 1, dtype=np.float64)
+        fe = f2 ** ke
+        t_w = td.weight + ke if f2 == 1.0 else fe * td.weight + (1.0 - fe) / (1.0 - f2)
+        _, t_dev = _mean_dev(t_sum[c_excl], t_ssq[c_excl], t_w[c_excl])
+
+        n_i = self.count + np.arange(n)
+        ready = n_i >= self.minimum_scores
+        if self.score_differencing != 0:
+            ready = ready & (se.count + np.arange(n) >= self.minimum_scores)
+
+        pr.sum, pr.sum_squared, pr.weight = float(p_sum_end), float(p_ssq_end), float(p_w_end)
+        pr.count += n
+        se.sum, se.sum_squared, se.weight = float(s_sum_end), float(s_ssq_end), float(s_w_end)
+        se.count += n
+        td.sum, td.sum_squared, td.weight = float(t_sum[ne]), float(t_ssq[ne]), float(t_w[ne])
+        td.count += ne
+        self.count += n
+        self.last_score = float(s[-1])
+        return p_mean, p_dev, t_dev, ready, n_i
+
     def process_batch(
         self, scores: np.ndarray, normalized: bool = True, block: int = 256
     ) -> tuple[np.ndarray, np.ndarray]:
@@ -198,104 +287,23 @@ class BasicThresholder:
 
         The three Deviation recurrences (``s' = s·f + x``) have closed-form
         prefix expressions ``s_i = f^i s_0 + Σ x_j f^{i−1−j}``; computing
-        them blockwise (f^{-j} stays bounded within a block) replaces the
-        per-row Python loop with a handful of NumPy passes. Results match
+        them blockwise (``_blocks``, ``_advance``) replaces the per-row
+        Python loop with a handful of NumPy passes. Results match
         sequential ``process`` up to floating-point reassociation (the
         recurrence is evaluated in a different association order).
         """
         scores = np.asarray(scores, np.float64)
-        B = len(scores)
-        thresholds = np.empty(B)
-        grades = np.empty(B)
-        f1 = 1.0 - self.primary.discount
-        f2 = 1.0 - self.threshold_dev.discount
+        thresholds = np.empty(len(scores))
+        grades = np.empty(len(scores))
         m = self.minimum_scores
         sqrt2 = math.sqrt(2.0)
-        # bound the f^{-j} prefix factors at 1e12 — with a large discount a
-        # fixed 256 block would overflow/cancel (f=0.8 ⇒ f^-255 ≈ 6e24)
-        fmin = min(f1, f2)
-        if fmin < 1.0:
-            block = max(1, min(block, int(27.6 / -math.log(fmin))))
-
-        for lo in range(0, B, block):
-            s = scores[lo : lo + block]
+        for sl in self._blocks(len(scores), block):
+            s = scores[sl]
             n = len(s)
-            capped = np.minimum(s, 2.0)
-            j = np.arange(n, dtype=np.float64)
-
-            def prefix(x, s0, f):
-                """state BEFORE each row i (i=0..n−1) plus end state."""
-                if f == 1.0:
-                    c = np.concatenate([[0.0], np.cumsum(x)])
-                    return s0 + c[:-1], s0 + c[-1]
-                # s_i = f^i (s0 + Σ_{j<i} x_j f^{−1−j}·f^{... }) — blockwise
-                # stable: exponents bounded by the block length
-                inv = f ** (-j)  # f^{-j}, bounded within a block
-                c = np.concatenate([[0.0], np.cumsum(x * inv)])
-                fi = f ** np.arange(n + 1, dtype=np.float64)
-                pre = fi[:n] * s0 + (fi[:n] / f) * c[:-1]
-                end = fi[n] * s0 + (fi[n] / f) * c[-1]
-                return pre, end
-
-            # primary deviation (input: capped scores)
-            p_sum, p_sum_end = prefix(capped, self.primary.sum, f1)
-            p_ssq, p_ssq_end = prefix(capped * capped, self.primary.sum_squared, f1)
-            p_w, p_w_end = prefix(np.ones(n), self.primary.weight, f1)
-            p_mean = np.where(p_w > 0, p_sum / np.where(p_w > 0, p_w, 1.0), 0.0)
-            p_var = np.maximum(
-                np.where(p_w > 0, p_ssq / np.where(p_w > 0, p_w, 1.0), 0.0)
-                - p_mean * p_mean,
-                0.0,
+            diffs = s - np.concatenate([[self.last_score], s[:-1]])
+            p_mean, p_dev, t_dev, ready, n_i = self._advance(
+                s, np.minimum(s, 2.0), diffs
             )
-            p_dev = np.sqrt(p_var)
-
-            # secondary deviation (input: score differences)
-            prev = np.concatenate([[self.last_score], s[:-1]])
-            diffs = s - prev
-            s_sum, s_sum_end = prefix(diffs, self.secondary.sum, f1)
-            s_ssq, s_ssq_end = prefix(diffs * diffs, self.secondary.sum_squared, f1)
-            s_w, s_w_end = prefix(np.ones(n), self.secondary.weight, f1)
-
-            # threshold deviation: updated only on positive below-mean gaps
-            gaps = p_mean - capped
-            ev = gaps > 0
-            c_excl = np.concatenate([[0], np.cumsum(ev)])[:-1]  # events before row i
-            ev_vals = gaps[ev]
-            ne = len(ev_vals)
-            je = np.arange(ne, dtype=np.float64)
-            if f2 == 1.0:
-                tc = np.concatenate([[0.0], np.cumsum(ev_vals)])
-                t_sum_states = self.threshold_dev.sum + tc
-                tcq = np.concatenate([[0.0], np.cumsum(ev_vals * ev_vals)])
-                t_ssq_states = self.threshold_dev.sum_squared + tcq
-                t_w_states = self.threshold_dev.weight + np.arange(ne + 1, dtype=np.float64)
-            else:
-                inv2 = f2 ** (-je)
-                fe = f2 ** np.arange(ne + 1, dtype=np.float64)
-                tc = np.concatenate([[0.0], np.cumsum(ev_vals * inv2)])
-                t_sum_states = fe * self.threshold_dev.sum + (fe / f2) * tc
-                tcq = np.concatenate([[0.0], np.cumsum(ev_vals * ev_vals * inv2)])
-                t_ssq_states = fe * self.threshold_dev.sum_squared + (fe / f2) * tcq
-                t_w_states = fe * self.threshold_dev.weight + (
-                    (1.0 - fe) / (1.0 - f2)
-                )
-            t_sum = t_sum_states[c_excl]
-            t_ssq = t_ssq_states[c_excl]
-            t_w = t_w_states[c_excl]
-            t_mean = np.where(t_w > 0, t_sum / np.where(t_w > 0, t_w, 1.0), 0.0)
-            t_var = np.maximum(
-                np.where(t_w > 0, t_ssq / np.where(t_w > 0, t_w, 1.0), 0.0)
-                - t_mean * t_mean,
-                0.0,
-            )
-            t_dev = np.sqrt(t_var)
-
-            # per-row counts BEFORE each update
-            n_i = self.count + np.arange(n)
-            sc_i = self.secondary.count + np.arange(n)
-            ready = n_i >= m
-            if self.score_differencing != 0:
-                ready = ready & (sc_i >= m)
             inter = np.clip((n_i - m) / m, 0.0, 1.0)
             inter[n_i < m] = 0.0
 
@@ -340,26 +348,8 @@ class BasicThresholder:
             t_val = np.where(ready, t_ready, t_cold)
             g = np.minimum(np.floor(t_val * 20.0) / 16.0, 1.0)
             g = np.where(over, g, 0.0)
-            thr = np.where(over & (g == 0), s, thr)  # grade floored to 0 ⇒ thr=score
-
-            thresholds[lo : lo + n] = thr
-            grades[lo : lo + n] = g
-
-            # commit end-of-block state
-            self.primary.sum = float(p_sum_end)
-            self.primary.sum_squared = float(p_ssq_end)
-            self.primary.weight = float(p_w_end)
-            self.primary.count += n
-            self.secondary.sum = float(s_sum_end)
-            self.secondary.sum_squared = float(s_ssq_end)
-            self.secondary.weight = float(s_w_end)
-            self.secondary.count += n
-            self.threshold_dev.sum = float(t_sum_states[ne])
-            self.threshold_dev.sum_squared = float(t_ssq_states[ne])
-            self.threshold_dev.weight = float(t_w_states[ne])
-            self.threshold_dev.count += ne
-            self.count += n
-            self.last_score = float(s[-1])
+            thresholds[sl] = np.where(over & (g == 0), s, thr)  # grade 0 ⇒ thr=score
+            grades[sl] = g
         return thresholds, grades
 
     # -- primary-only threshold/grade (BasicThresholder.java:155-192) -----
@@ -423,75 +413,9 @@ class BasicThresholder:
         secondaries = np.asarray(secondaries, np.float64)
         thresholds = np.empty(B)
         grades = np.empty(B)
-        f1 = 1.0 - self.primary.discount
-        f2 = 1.0 - self.threshold_dev.discount
-        m = self.minimum_scores
-        fmin = min(f1, f2)
-        if fmin < 1.0:
-            block = max(1, min(block, int(27.6 / -math.log(fmin))))
-
-        for lo in range(0, B, block):
-            s = scores[lo : lo + block]
-            sec = secondaries[lo : lo + block]
-            n = len(s)
-
-            def prefix(x, s0, f):
-                if f == 1.0:
-                    c = np.concatenate([[0.0], np.cumsum(x)])
-                    return s0 + c[:-1], s0 + c[-1]
-                j = np.arange(n, dtype=np.float64)
-                inv = f ** (-j)
-                c = np.concatenate([[0.0], np.cumsum(x * inv)])
-                fi = f ** np.arange(n + 1, dtype=np.float64)
-                return fi[:n] * s0 + (fi[:n] / f) * c[:-1], fi[n] * s0 + (
-                    fi[n] / f
-                ) * c[-1]
-
-            p_sum, p_sum_end = prefix(s, self.primary.sum, f1)
-            p_ssq, p_ssq_end = prefix(s * s, self.primary.sum_squared, f1)
-            p_w, p_w_end = prefix(np.ones(n), self.primary.weight, f1)
-            p_mean = np.where(p_w > 0, p_sum / np.where(p_w > 0, p_w, 1.0), 0.0)
-            p_var = np.maximum(
-                np.where(p_w > 0, p_ssq / np.where(p_w > 0, p_w, 1.0), 0.0)
-                - p_mean * p_mean,
-                0.0,
-            )
-            p_dev = np.sqrt(p_var)
-
-            s_sum_end = prefix(sec, self.secondary.sum, f1)[1]
-            s_ssq_end = prefix(sec * sec, self.secondary.sum_squared, f1)[1]
-            s_w_end = prefix(np.ones(n), self.secondary.weight, f1)[1]
-
-            # threshold deviation (two-arg update: gap vs UNCAPPED primary)
-            gaps = p_mean - s
-            ev = gaps > 0
-            c_excl = np.concatenate([[0], np.cumsum(ev)])[:-1]
-            ev_vals = gaps[ev]
-            ne = len(ev_vals)
-            if f2 == 1.0:
-                tc = np.concatenate([[0.0], np.cumsum(ev_vals)])
-                t_sum_states = self.threshold_dev.sum + tc
-                tcq = np.concatenate([[0.0], np.cumsum(ev_vals * ev_vals)])
-                t_ssq_states = self.threshold_dev.sum_squared + tcq
-                t_w_states = self.threshold_dev.weight + np.arange(
-                    ne + 1, dtype=np.float64
-                )
-            else:
-                je = np.arange(ne, dtype=np.float64)
-                inv2 = f2 ** (-je)
-                fe = f2 ** np.arange(ne + 1, dtype=np.float64)
-                tc = np.concatenate([[0.0], np.cumsum(ev_vals * inv2)])
-                t_sum_states = fe * self.threshold_dev.sum + (fe / f2) * tc
-                tcq = np.concatenate([[0.0], np.cumsum(ev_vals * ev_vals * inv2)])
-                t_ssq_states = fe * self.threshold_dev.sum_squared + (fe / f2) * tcq
-                t_w_states = fe * self.threshold_dev.weight + ((1.0 - fe) / (1.0 - f2))
-
-            n_i = self.count + np.arange(n)
-            sc_i = self.secondary.count + np.arange(n)
-            ready = n_i >= m
-            if self.score_differencing != 0:
-                ready = ready & (sc_i >= m)
-
+        for sl in self._blocks(B, block):
+            s = scores[sl]
+            p_mean, p_dev, _, ready, _ = self._advance(s, s, secondaries[sl])
             thr = np.where(ready, p_mean + self.z_factor * p_dev, 0.0)
             over = ready & (s > 0) & (thr > 0) & (s > thr)
             with np.errstate(invalid="ignore", divide="ignore"):
@@ -503,23 +427,8 @@ class BasicThresholder:
             g = np.where(
                 p_dev > 0, g, np.where(s > p_mean + 1e-10, 1.0, 0.0)
             )
-            grades[lo : lo + n] = np.where(over, g, 0.0)
-            thresholds[lo : lo + n] = thr
-
-            self.primary.sum = float(p_sum_end)
-            self.primary.sum_squared = float(p_ssq_end)
-            self.primary.weight = float(p_w_end)
-            self.primary.count += n
-            self.secondary.sum = float(s_sum_end)
-            self.secondary.sum_squared = float(s_ssq_end)
-            self.secondary.weight = float(s_w_end)
-            self.secondary.count += n
-            self.threshold_dev.sum = float(t_sum_states[ne])
-            self.threshold_dev.sum_squared = float(t_ssq_states[ne])
-            self.threshold_dev.weight = float(t_w_states[ne])
-            self.threshold_dev.count += ne
-            self.count += n
-            self.last_score = float(s[-1])
+            grades[sl] = np.where(over, g, 0.0)
+            thresholds[sl] = thr
         return thresholds, grades
 
     # -- checkpoint -------------------------------------------------------

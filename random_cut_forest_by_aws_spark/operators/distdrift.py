@@ -93,9 +93,14 @@ def _pivot_counts(tagged: DataFrame, keys: list[str], gkeys: list[str]) -> DataF
         F.sum("cnt_b").alias("n_curr"),
         F.count(F.lit(1)).alias("n_bins"),
     )
-    if gkeys:
-        return joined.join(F.broadcast(totals), gkeys)
-    return joined.crossJoin(F.broadcast(totals))
+    if not gkeys:
+        return joined.crossJoin(F.broadcast(totals))
+    # null-safe keys, so a NULL group finds its own totals (an equi-join
+    # on the group keys would drop it)
+    renamed = [f"__g{i}" for i in range(len(gkeys))]
+    totals = totals.toDF(*renamed, "n_base", "n_curr", "n_bins")
+    on = [F.col(g).eqNullSafe(F.col(r)) for g, r in zip(gkeys, renamed)]
+    return joined.join(F.broadcast(totals), on).drop(*renamed)
 
 
 def _split_side(df: DataFrame, base_predicate) -> DataFrame:

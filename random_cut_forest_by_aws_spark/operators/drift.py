@@ -967,30 +967,15 @@ def _make_drift_fn(group_cols: list[str], order_col: str, feature_cols: list[str
     return fn
 
 
-def drift_scores(
-    df: DataFrame,
-    feature_col: str = "features",
-    group_cols: tuple[str, ...] = ("source",),
-    order_col: str = "seq",
-    cfg: DriftConfig | None = None,
-) -> DataFrame:
-    """Raw drift output: anomaly rows + one summary row per (group, bucket).
-
-    Input must already carry ``feature_col`` — a struct of numeric fields,
-    one per feature dimension in field order (``F.struct(...)``; see
-    functions.token_features) — and a monotone ``order_col``. The width
-    is read from ``df.schema``; any other feature type raises
-    ``TypeError`` before a job runs. Only the needed columns cross the
-    Arrow boundary (tokens etc. are pruned before the shuffle).
-    """
-    cfg = cfg or DriftConfig()
+def _check_config(cfg: DriftConfig) -> None:
+    """Raise ``ValueError`` for a ``DriftConfig`` value no drift operator
+    knows, before any plan is built (batch and streaming alike)."""
     if cfg.mode not in ("standard", "time_augmented", "streaming_impute"):
         raise ValueError(f"unknown ForestMode {cfg.mode!r}")
     if cfg.impute_method not in ("zero", "fixed", "previous", "next", "linear", "rcf"):
         raise ValueError(f"unknown ImputationMethod {cfg.impute_method!r}")
-    _METHODS = ("none", "normalize", "difference", "normalize_difference",
-                "weighted", "subtract_ma")
-    if cfg.transform not in _METHODS:
+    if cfg.transform not in ("none", "normalize", "difference", "normalize_difference",
+                             "weighted", "subtract_ma"):
         raise ValueError(f"unknown TransformMethod {cfg.transform!r}")
     if cfg.shingle_size < 1:
         raise ValueError("shingle_size must be >= 1")
@@ -1009,6 +994,26 @@ def drift_scores(
         "expected_inverse_depth", "distance", "multi_mode", "multi_mode_recall"
     ):
         raise ValueError(f"unknown ScoringStrategy {cfg.scoring!r}")
+
+
+def drift_scores(
+    df: DataFrame,
+    feature_col: str = "features",
+    group_cols: tuple[str, ...] = ("source",),
+    order_col: str = "seq",
+    cfg: DriftConfig | None = None,
+) -> DataFrame:
+    """Raw drift output: anomaly rows + one summary row per (group, bucket).
+
+    Input must already carry ``feature_col`` — a struct of numeric fields,
+    one per feature dimension in field order (``F.struct(...)``; see
+    functions.token_features) — and a monotone ``order_col``. The width
+    is read from ``df.schema``; any other feature type raises
+    ``TypeError`` before a job runs. Only the needed columns cross the
+    Arrow boundary (tokens etc. are pruned before the shuffle).
+    """
+    cfg = cfg or DriftConfig()
+    _check_config(cfg)
     feat_names, feat_cols = _feature_columns(df, feature_col)
     gcols = list(group_cols)
     if cfg.mode in ("streaming_impute", "time_augmented"):

@@ -36,6 +36,7 @@ from ..core.forest import RCFForest
 from ..core.thresholder import BasicThresholder
 from ..operators.drift import (
     DriftConfig,
+    _check_config,
     _feature_columns,
     _feature_matrix,
     _load_group_state,
@@ -71,11 +72,21 @@ def streaming_drift_scores(
     field order (``F.struct(...)``; see functions.token_features). Any
     other feature type raises ``TypeError`` before the query starts.
     Each group value is hashed into ``cfg.buckets or 8`` buckets by
-    ``order_col``, each carrying its own sketch.
+    ``order_col``, each carrying its own sketch. ``cfg`` is checked as
+    ``drift_scores`` checks it; only ``mode="standard"`` with
+    ``scoring="expected_inverse_depth"`` is implemented here, so any
+    other mode or scoring raises ``ValueError`` before the query starts.
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     cfg = cfg or DriftConfig()
+    _check_config(cfg)
+    if cfg.mode != "standard" or cfg.scoring != "expected_inverse_depth":
+        raise ValueError(
+            "streaming drift implements mode='standard' with "
+            f"scoring='expected_inverse_depth' only (got mode={cfg.mode!r}, "
+            f"scoring={cfg.scoring!r})"
+        )
     feat_names, feat_cols = _feature_columns(df, feature_col)
     gcols = list(group_cols)
     buckets = cfg.buckets or 8

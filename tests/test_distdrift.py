@@ -457,13 +457,21 @@ def test_token_drift_null_elements_and_groups(spark):
     from random_cut_forest_by_aws_spark.operators.distdrift import token_drift
 
     # unigram: a NULL element is its own bin (null-token drift); per-group
-    # isolation: g2 identical on both sides stays zero
-    base = _tok_df(spark, [("g1", ["a", None, "a"]), ("g2", ["z", "z"])])
-    curr = _tok_df(spark, [("g1", ["a", None, None]), ("g2", ["z", "z"])])
+    # isolation: g2 identical on both sides stays zero; a NULL group key
+    # is a group of its own
+    base = _tok_df(spark, [("g1", ["a", None, "a"]), ("g2", ["z", "z"]),
+                           (None, ["q", "q", "r"])])
+    curr = _tok_df(spark, [("g1", ["a", None, None]), ("g2", ["z", "z"]),
+                           (None, ["q", "r", "r"])])
     out = token_drift(base, curr, "toks", group_by=["src"],
-                      round_dp=9).toPandas().set_index("src")
+                      round_dp=9).toPandas()
+    assert len(out) == 3
+    null_group = out[out["src"].isna()]
+    out = out.set_index("src")
     exp = _np_metrics([2, 1], [1, 2])
     assert out.loc["g1", "psi"] == pytest.approx(exp["psi"], abs=1e-8)
+    assert null_group["psi"].tolist() == [pytest.approx(exp["psi"], abs=1e-8)]
+    assert null_group["n_base"].tolist() == [3]
     for m in ("psi", "js_div", "linf", "tvd", "chi2", "ks"):
         assert out.loc["g2", m] == 0.0, m
 

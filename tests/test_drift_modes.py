@@ -173,16 +173,18 @@ def test_time_augmented_flags_cadence_shift():
 # --------------------------------------------------------------------- #
 # thresholder batching
 # --------------------------------------------------------------------- #
-def test_thresholder_batch_matches_sequential():
+@pytest.mark.parametrize("discount", [0.0, 0.01])
+def test_thresholder_batch_matches_sequential(discount):
     """process_batch must reproduce sequential process() thresholds,
-    grades and end state (up to fp reassociation)."""
+    grades and end state (up to fp reassociation). Discount 0 takes the
+    undiscounted (f == 1) prefix branch."""
     from random_cut_forest_by_aws_spark.core.thresholder import BasicThresholder
 
     rng = np.random.default_rng(11)
     scores = np.abs(rng.normal(1.0, 0.3, 5000))
     scores[rng.integers(0, 5000, 50)] += 2.5  # spikes exercise the grade path
-    seq_th = BasicThresholder()
-    bat_th = BasicThresholder()
+    seq_th = BasicThresholder(discount=discount)
+    bat_th = BasicThresholder(discount=discount)
     exp = np.array([seq_th.process(float(s)) for s in scores])
     got_t, got_g = bat_th.process_batch(scores)
     np.testing.assert_allclose(got_t, exp[:, 0], rtol=1e-9, atol=1e-12)
@@ -326,15 +328,18 @@ def test_shingled_checkpoint_resume_bit_exact(tmp_path):
 # --------------------------------------------------------------------- #
 # ScoringStrategy (distance / multi_mode)
 # --------------------------------------------------------------------- #
-def test_primary_process_batch_matches_scalar():
+@pytest.mark.parametrize("discount", [0.0, 0.01, 0.2])
+def test_primary_process_batch_matches_scalar(discount):
     """primary_process_batch == primary_threshold_and_grade-then-update2
-    per row (the DISTANCE-mode inner loop), including committed state."""
+    per row (the DISTANCE-mode inner loop), including committed state.
+    Discount 0 takes the undiscounted (f == 1) prefix branch, 0.2 the
+    capped 123-row blocks."""
     from random_cut_forest_by_aws_spark.core.thresholder import BasicThresholder
 
     rng = np.random.default_rng(3)
     scores = np.abs(rng.normal(1.0, 0.3, 500)) + 0.01
-    a = BasicThresholder()
-    b = BasicThresholder()
+    a = BasicThresholder(discount=discount)
+    b = BasicThresholder(discount=discount)
     thr_s, g_s = [], []
     prev = a.last_score
     for x in scores:

@@ -364,6 +364,38 @@ def test_drift_scores_rejects_non_struct_features_at_plan_time(spark, features, 
         assert _jobs_run_by(spark, build) == []
 
 
+_BAD_CONFIGS = [
+    dict(transform="normalise"), dict(mode="bogus"), dict(scoring="bogus"),
+    dict(impute_method="bogus"), dict(shingle_size=0),
+]
+
+
+@pytest.mark.parametrize(
+    "op, bad",
+    [(op, bad) for op in ("batch", "streaming") for bad in _BAD_CONFIGS]
+    # valid for the batch operator, not implemented by the streaming one
+    + [("streaming", dict(mode="time_augmented")), ("streaming", dict(scoring="distance"))],
+    ids=lambda v: v if isinstance(v, str) else "-".join(f"{k}={x}" for k, x in v.items()),
+)
+def test_drift_rejects_bad_config_before_any_job(spark, op, bad):
+    """Both drift operators check the DriftConfig the same way and raise
+    ValueError before a job runs; the streaming operator also rejects the
+    modes and scorings it does not implement instead of ignoring them."""
+    from random_cut_forest_by_aws_spark.streaming import streaming_drift_scores
+
+    fn = drift_scores if op == "batch" else streaming_drift_scores
+    df = spark.range(10).select(
+        F.lit("s").alias("source"), F.col("id").alias("seq"),
+        F.struct(F.col("id").cast("double").alias("x")).alias("features"),
+    )
+
+    def build():
+        with pytest.raises(ValueError):
+            fn(df, cfg=_cfg(**bad))
+
+    assert _jobs_run_by(spark, build) == []
+
+
 def test_drift_scores_struct_field_order_matches_udf(spark):
     """drift_scores over a 2-field struct gives exactly the raw rows the
     grouped-map fn gives on the same pandas rows with the fields as

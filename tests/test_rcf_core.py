@@ -93,6 +93,36 @@ def test_two_point_tree_closed_form():
     assert got_far == pytest.approx(expected_far, rel=1e-12)
 
 
+def test_leaf_points_match_scalar_descent():
+    """leaf_points returns, per (query, live tree), the point and mass of
+    the leaf a scalar walk with the update path's rule reaches
+    (``x[cutdim] <= cutval`` goes left), including queries that sit
+    exactly on a cut value and duplicates of sampled points."""
+    rng = np.random.default_rng(8)
+    X = rng.normal(size=(400, 3)).astype(np.float32)
+    X[::5] = X[1]  # duplicate leaves (mass > 1)
+    f = RCFForest(3, num_trees=6, sample_size=32, seed=4)
+    f.update_batch(X)
+    live = np.nonzero(f.root >= 0)[0]
+    queries = [X[i].copy() for i in range(0, 400, 37)]
+    for t in live:
+        for node in np.nonzero(f.cutdim[t] >= 0)[0][:5]:
+            q = X[int(node)].copy()
+            q[f.cutdim[t, node]] = f.cutval[t, node]  # exactly on the cut
+            queries.append(q)
+    Q = np.asarray(queries, np.float32)
+    pts, masses = f.leaf_points(Q)
+    assert pts.shape == (len(Q), len(live), 3) and masses.shape == (len(Q), len(live))
+    for i, x in enumerate(Q):
+        for j, t in enumerate(live):
+            node = int(f.root[t])
+            while f.cutdim[t, node] >= 0:
+                go_left = x[f.cutdim[t, node]] <= f.cutval[t, node]
+                node = int(f.left[t, node] if go_left else f.right[t, node])
+            assert np.array_equal(pts[i, j], f.bbmin[t, node]), (i, t)
+            assert masses[i, j] == f.mass[t, node], (i, t)
+
+
 def test_sampler_reservoir_and_tree_sync():
     rng = np.random.default_rng(7)
     f = RCFForest(3, num_trees=3, sample_size=32, seed=11)

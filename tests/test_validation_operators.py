@@ -167,11 +167,12 @@ def test_column_stats_sketch_quantiles(spark):
 
 
 def test_suite_concurrent_materialization_equivalent(spark, seqs):
-    """SPARK_GRAFT_SUITE_CONCURRENT=1 (SuiteConfig.concurrent — the
-    real-cluster default) materializes the independent checks from
-    driver threads; verdicts and violation evidence must be IDENTICAL to
-    the sequential local-mode path (thread scheduling must not leak into
-    results — every check is deterministic)."""
+    """SuiteConfig.concurrent=True (off by default; meant for a real
+    multi-executor cluster, and set by bench.py's
+    SPARK_GRAFT_SUITE_CONCURRENT=1) materializes the independent checks
+    from driver threads; verdicts and violation evidence must be
+    IDENTICAL to the sequential path (thread scheduling must not leak
+    into results — every check is deterministic)."""
     from random_cut_forest_by_aws_spark.operators.drift import DriftConfig
     from random_cut_forest_by_aws_spark.plans import SuiteConfig, ValidationSuite
 
